@@ -36,11 +36,20 @@ join): there the retained metadata is load-bearing and plain
 to a public method in bytecode, so py4j can call it; if the internal API
 moves in a future Spark, the helper degrades to the plain checkpoint
 (correctness unaffected, the planning tax returns).
+
+``fixpoint`` is the one driver every iterative graph operator runs
+through: ``state <- cut(step(state))`` until no row of the new state
+matches the caller's ``changed`` predicate.  The changed count rides the
+round's checkpoint action as an ``observe`` metric, so a round is one
+action, never a checkpoint plus a separate probe job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def checkpoint_cut(df: DataFrame) -> DataFrame:
@@ -54,6 +63,45 @@ def checkpoint_cut(df: DataFrame) -> DataFrame:
         return DataFrame(j2, ck.sparkSession)
     except Exception:  # pragma: no cover — internal-API drift fallback
         return ck
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    changed: Column,
+    name: str,
+    max_rounds: int | None = None,
+    truncate: bool = False,
+) -> DataFrame:
+    """Iterate ``state <- cut(step(state))`` to a fixpoint; return the
+    final (checkpointed) state.
+
+    ``state`` is checkpointed once up front, its row count observed in
+    that same action.  Each round then runs ``step`` on the checkpointed
+    state and checkpoints the result, reading ``coalesce(sum(changed),
+    0)`` over the new rows in the same action; a zero count ends the
+    loop (the coalesce keeps an empty state from reading as NULL and
+    spinning).  ``max_rounds=None`` caps the loop at the initial row
+    count (at least 1): label propagation over n nodes settles within
+    n rounds, so that cap never trips on correct code.
+
+    Past the cap the loop raises ``RuntimeError("<name> did not converge
+    in N rounds")`` — unless ``truncate``: then the cap is part of the
+    answer (a hop or step budget, an oracle's fixed round count) and the
+    state after N rounds is returned."""
+    rows = Observation()
+    state = checkpoint_cut(state.observe(rows, F.count(F.lit(1)).alias("n")))
+    cap = max(rows.get["n"], 1) if max_rounds is None else max_rounds
+    for _ in range(cap):
+        obs = Observation()
+        state = checkpoint_cut(step(state).observe(
+            obs, F.coalesce(F.sum(changed.cast("long")), F.lit(0)).alias("n")
+        ))
+        if obs.get["n"] == 0:
+            return state
+    if truncate:
+        return state
+    raise RuntimeError(f"{name} did not converge in {cap} rounds")
 
 
 def _install() -> None:

@@ -9,14 +9,14 @@ self-joins.
 
 Algorithm: min-label propagation with path-halving — each round every node
 adopts min(own label, neighbors' labels), then labels chase their own
-parents (label <- label[label]) which doubles convergence speed.  Rounds =
-O(log(diameter)); entity-alias graphs are near-star-shaped so 2-4 rounds
-in practice.  The one genuinely scale-lethal trap is Catalyst lineage
-blowup across iterations — every round ends in localCheckpoint(eager=True)
-to truncate the plan (SURVEY §4).
-
-Convergence is decided by an aggregate ("did any label change?") — one
-scalar collect per round, the only driver<->cluster crossing.
+parents (label <- label[label]).  Halving shortcuts labels that point at
+nodes already holding smaller ones, but the global minimum can still
+advance only one hop per round along a path, so rounds are bounded by
+(longest shortest path to the minimum) + 1 <= n, not by log(diameter);
+entity-alias graphs are near-star-shaped, so 2-4 rounds in practice.
+The loop runs on ckpt.fixpoint with the node count as its cap: one
+origin-cut checkpoint per round (the Catalyst lineage trap, SURVEY §4)
+whose action also counts the changed labels.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import checkpoint_cut as _checkpoint_cut  # noqa: F401 — registers df.localCheckpointCut
+from ..ckpt import fixpoint  # also registers df.localCheckpointCut
 
 
 def _bidirect(edges: DataFrame) -> DataFrame:
@@ -69,7 +69,7 @@ def _driver_side_cc(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 25, small_graph_edges: int | None = None
+    edges: DataFrame, small_graph_edges: int | None = None
 ) -> DataFrame:
     """edges: DataFrame[src:string, dst:string] (undirected; self-loops ok)
     -> DataFrame[node:string, component:string] where component is the
@@ -92,46 +92,38 @@ def connected_components(
     e = _bidirect(edges).where(F.col("src") != F.col("dst")).distinct()
     e = e.localCheckpointCut()
 
+    def step(labels: DataFrame) -> DataFrame:
+        # candidate label per node from each neighbor's current label; the
+        # old label rides the min-groupBy as `old` (NULL on neighbor rows)
+        labels = labels.select("node", "component")
+        nbr = e.join(labels.withColumnRenamed("node", "dst"), "dst").select(
+            F.col("src").alias("node"), "component",
+            F.lit(None).cast("string").alias("old"),
+        )
+        new_labels = (
+            labels.withColumn("old", F.col("component"))
+            .unionByName(nbr)
+            .groupBy("node")
+            .agg(F.min("component").alias("component"), F.max("old").alias("old"))
+        )
+        # path halving: component <- label(component)
+        parent = new_labels.select(
+            F.col("node").alias("component"), F.col("component").alias("grand")
+        )
+        return new_labels.join(parent, "component", "left").select(
+            "node", F.coalesce("grand", "component").alias("component"), "old"
+        )
+
     labels = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .union(edges.where(F.col("src") == F.col("dst")).select(F.col("src").alias("node")))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpointCut()
     )
-
-    for _ in range(max_iter):
-        # candidate label per node from each neighbor's current label
-        nbr = (
-            e.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .select(F.col("src").alias("node"), "component")
-        )
-        new_labels = (
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
-        # path halving: component <- label(component)
-        parent = new_labels.select(
-            F.col("node").alias("component"), F.col("component").alias("grand")
-        )
-        halved = (
-            new_labels.join(parent, "component", "left")
-            .select("node", F.coalesce("grand", "component").alias("component"))
-        ).localCheckpointCut()
-
-        changed = (
-            halved.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = halved
-        if changed == 0:
-            break
-    return labels
+    return fixpoint(
+        labels, step, F.col("component") != F.col("old"), "connected_components"
+    ).select("node", "component")
 
 
 def cc_incremental(

@@ -10,9 +10,10 @@ and "what is a valid dependency order / where are the cycles" (topo
 levels over partOf/followedBy DAGs).  The reference's rdflib graphs
 answer both by in-memory traversal; at 10^12 edges they are iterative
 DataFrame problems with the same two scale traps the closure/CC loops
-already solve: Catalyst lineage blowup (localCheckpoint per round) and
-driver-side convergence decisions (one scalar probe per round, never a
-data collect).
+already solve: Catalyst lineage blowup and driver-side convergence
+decisions — both loops run on ckpt.fixpoint (one origin-cut checkpoint
+action per round that also reads the changed count, never a data
+collect).
 
 SCC algorithm — block refinement with min-label propagation:
   maintain a partition of the unassigned nodes into BLOCKS (initially
@@ -20,8 +21,11 @@ SCC algorithm — block refinement with min-label propagation:
     fwd(v) = min node id that reaches v on a path inside the block
     bwd(v) = min node id v reaches on a path inside the block
   both computed by min-label propagation along (reversed) edges with
-  POINTER HALVING (lab <- min(lab, lab[lab]) — the same O(log depth)
-  accelerator cc.py uses), convergence decided by a one-row probe.
+  POINTER HALVING (lab <- min(lab, lab[lab]), as in cc.py).  Halving
+  helps only when labels point at nodes that already hold smaller
+  labels; a chain whose minimum sits at its tail still moves that label
+  one hop per round, so a propagation may take up to n rounds over n
+  nodes — the cap, taken from the node count, never trips.
   Every node with fwd(v) == bwd(v) == m is assigned scc = m (m reaches
   v and v reaches m, so v is in SCC(m) — sound unconditionally).  The
   survivors re-block on the key (block, fwd, bwd): nodes of one SCC
@@ -45,10 +49,13 @@ the whole assignment.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+import itertools
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import checkpoint_cut as _checkpoint_cut  # noqa: F401 — registers df.localCheckpointCut
+from ..ckpt import fixpoint  # also registers df.localCheckpointCut
 
 # Mirrors cc.SMALL_GRAPH_EDGES: below this the edge list collects to the
 # driver and an exact Tarjan/Kahn runs in microseconds; the iterative
@@ -165,9 +172,7 @@ def _driver_side_topo(
 # --------------------------------------------------------------------------
 
 
-def _min_reach_labels(
-    e: DataFrame, nodes: DataFrame, max_inner: int
-) -> DataFrame:
+def _min_reach_labels(e: DataFrame, nodes: DataFrame) -> DataFrame:
     """min-label propagation to fixpoint along e (src -> dst), with
     pointer halving.  nodes: DataFrame[node]; e: DataFrame[src, dst],
     every endpoint present in nodes, all edges inside one refinement
@@ -176,19 +181,19 @@ def _min_reach_labels(
 
     Invariant that makes halving sound: lab(v) is always an ancestor of
     v inside the block (init self; adoption moves labels one edge
-    forward; lab(lab(v)) is an ancestor of an ancestor).
+    forward; lab(lab(v)) is an ancestor of an ancestor).  Halving never
+    slows the plain one-hop-per-round propagation, which settles within
+    (longest shortest path to the minimum ancestor) + 1 <= n rounds, so
+    the fixpoint's node-count cap is never hit — though a chain whose
+    minimum sits at its tail still needs one round per hop.
 
-    Job-count discipline (VERDICT r04 §What's wrong 3): one Spark job
-    per inner round, not two.  The old label rides the existing
-    union+groupBy as `olab` (each node occurs exactly once in `labels`,
-    so max(olab) recovers it; neighbor rows contribute NULL), and the
-    convergence probe is an `observe()` metric collected by the SAME
-    action that materializes the eager checkpoint — the separate
-    probe-join job (a second scheduler round trip per round, dominating
-    q_scc wall on fixed-cost-bound fixtures) is gone.  Shuffle count
-    per round is unchanged."""
-    labels = nodes.withColumn("lab", F.col("node")).localCheckpointCut()
-    for _ in range(max_inner):
+    One Spark action per round: the old label rides the union+groupBy
+    as `olab` (each node occurs exactly once in `labels`, so max(olab)
+    recovers it; neighbor rows contribute NULL) and the changed count is
+    read by the round's own checkpoint (ckpt.fixpoint)."""
+
+    def step(labels: DataFrame) -> DataFrame:
+        labels = labels.select("node", "lab")
         nbr = e.join(
             labels.select(F.col("node").alias("src"), "lab"), "src"
         ).select(
@@ -197,9 +202,7 @@ def _min_reach_labels(
             F.lit(None).cast("string").alias("olab"),
         )
         stepped = (
-            labels.select(
-                "node", "lab", F.col("lab").alias("olab")
-            )
+            labels.select("node", "lab", F.col("lab").alias("olab"))
             .unionByName(nbr)
             .groupBy("node")
             .agg(F.min("lab").alias("lab"), F.max("olab").alias("olab"))
@@ -207,37 +210,20 @@ def _min_reach_labels(
         parent = labels.select(
             F.col("node").alias("lab"), F.col("lab").alias("grand")
         )
-        obs = Observation()
-        halved = (
-            stepped.join(parent, "lab", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lab"), F.coalesce("grand", "lab")
-                ).alias("lab"),
-                "olab",
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("lab") != F.col("olab")).cast("long")
-                ).alias("changed"),
-            )
-            .localCheckpointCut()
+        return stepped.join(parent, "lab", "left").select(
+            "node", F.least(F.col("lab"), F.coalesce("grand", "lab")).alias("lab"),
+            "olab",
         )
-        labels = halved.select("node", "lab")
-        if obs.get["changed"] == 0:
-            return labels
-    raise RuntimeError(
-        f"SCC inner propagation did not converge in {max_inner} rounds "
-        "(bounded by log2(block depth) with halving — raise max_inner)"
-    )
+
+    return fixpoint(
+        nodes.withColumn("lab", F.col("node")), step,
+        ~F.col("lab").eqNullSafe(F.col("olab")), "SCC label propagation",
+    ).select("node", "lab")
 
 
 def scc(
     edges: DataFrame,
     max_rounds: int = 30,
-    max_inner: int = 40,
     small_graph_edges: int | None = None,
 ) -> DataFrame:
     """edges: DataFrame[src:string, dst:string] directed ->
@@ -252,99 +238,60 @@ def scc(
     if edges.limit(limit + 1).count() <= limit:
         return _driver_side_scc(edges)
 
-    spark = edges.sparkSession
     e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpointCut()
     )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpointCut()
-    )
-    assigned_parts: list[DataFrame] = []
+    refined = itertools.count()
 
-    # Scheduler-latency discipline (VERDICT r04 §What's wrong 3): on
-    # fixed-cost-bound inputs q_scc's wall is job-launch latency, not
-    # data work.  Three fusions, all semantics-preserving:
-    #   - fwd and bwd min-reach are INDEPENDENT label propagations over
-    #     the same (reversed) edge set — run them on two driver threads
-    #     so their per-round job latencies overlap instead of adding;
-    #   - the survivor probe is an observe() metric on the SAME action
-    #     that checkpoints `both` (was a separate limit(1).count() job);
-    #   - `done` and `nodes` are filters over the checkpointed `both` —
-    #     their own eager checkpoints were pure extra jobs (cache reads
-    #     re-derive them for free; lineage is already truncated at both).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for _ in range(max_rounds):
-            rev = e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-            f_fwd = pool.submit(_min_reach_labels, e, nodes, max_inner)
-            f_bwd = pool.submit(_min_reach_labels, rev, nodes, max_inner)
-            fwd = f_fwd.result()
-            bwd = f_bwd.result().withColumnRenamed("lab", "blab")
-            obs = Observation()
-            both = (
-                fwd.join(bwd, "node")
-                .observe(
-                    obs,
-                    F.sum(
-                        (F.col("lab") != F.col("blab")).cast("long")
-                    ).alias("survivors"),
-                )
-                .localCheckpointCut()
-            )
-
-            done = both.where(F.col("lab") == F.col("blab")).select(
-                "node", F.col("lab").alias("scc")
-            )
-            assigned_parts.append(done)
-
-            survivors = both.where(F.col("lab") != F.col("blab"))
-            if obs.get["survivors"] == 0:
-                break
-            # re-block on (fwd, bwd); the old block is implied — edges
-            # never cross blocks, so refining by the per-block labels
-            # refines the old partition.  Edges whose endpoints land in
-            # different blocks (or touch an assigned node) can never
-            # witness an SCC again.
-            nodes = survivors.select("node")
-            blocks = survivors.select(
-                "node", F.concat_ws("\x1f", "lab", "blab").alias("blk")
-            )
+    def refine(state: DataFrame) -> DataFrame:
+        # state [node, blk, scc]: scc is set once a node is assigned;
+        # unassigned nodes carry their refinement block key
+        nonlocal e
+        live = state.where(F.col("scc").isNull())
+        if next(refined):  # blocks exist from the second round on
+            # Edges whose endpoints landed in different blocks (or touch
+            # an assigned node) can never witness an SCC again.
+            blk = live.select("node", "blk")
             e = (
-                e.join(
-                    blocks.select(F.col("node").alias("src"),
-                                  F.col("blk").alias("sblk")),
-                    "src",
-                )
-                .join(
-                    blocks.select(F.col("node").alias("dst"),
-                                  F.col("blk").alias("dblk")),
-                    "dst",
-                )
+                e.join(blk.select(F.col("node").alias("src"),
+                                  F.col("blk").alias("sblk")), "src")
+                .join(blk.select(F.col("node").alias("dst"),
+                                 F.col("blk").alias("dblk")), "dst")
                 .where(F.col("sblk") == F.col("dblk"))
                 .select("src", "dst")
                 .localCheckpointCut()
             )
-        else:
-            raise RuntimeError(
-                f"SCC block refinement did not converge in {max_rounds} "
-                "rounds — pathological condensation; raise max_rounds"
-            )
+        nodes = live.select("node")
+        rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        # fwd and bwd are independent propagations: run them on two
+        # driver threads so their per-round job latencies overlap
+        f_fwd = pool.submit(_min_reach_labels, e, nodes)
+        f_bwd = pool.submit(_min_reach_labels, rev, nodes)
+        both = f_fwd.result().join(
+            f_bwd.result().withColumnRenamed("lab", "blab"), "node")
+        # re-block on (fwd, bwd); the old block is implied — edges never
+        # cross blocks, so refining by the per-block labels refines the
+        # old partition
+        return state.where(F.col("scc").isNotNull()).unionByName(both.select(
+            "node",
+            F.concat_ws("\x1f", "lab", "blab").alias("blk"),
+            F.when(F.col("lab") == F.col("blab"), F.col("lab")).alias("scc"),
+        ))
 
-    if not assigned_parts:  # zero-round loop (max_rounds=0 edge case)
-        return spark.createDataFrame([], "node string, scc string")
-    out = assigned_parts[0]
-    for part in assigned_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    init = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .select("node", F.lit("").alias("blk"),
+                F.lit(None).cast("string").alias("scc"))
+    )
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        out = fixpoint(init, refine, F.col("scc").isNull(),
+                       "SCC block refinement", max_rounds=max_rounds)
+    return out.select("node", "scc")
 
 
 # --------------------------------------------------------------------------
@@ -370,12 +317,16 @@ def topo_levels(
     returned with level NULL — "no finite longest-path-from-root", and
     exactly the rows a cycle report wants.
 
-    Scale shape: one shuffle per peel ROUND on an ever-shrinking edge
-    set, frontier-proportional work, one scalar probe per round.
-    Rounds = DAG depth — right for the shallow dependency DAGs
-    (partOf/followedBy hierarchies) this engine stores; for
-    path-shaped graphs of depth ~|V| use transitive_closure/bfs
-    machinery instead (documented, not silently slow)."""
+    Scale shape: one ckpt.fixpoint round per peel level.  The state is
+    every node with its level (NULL until peeled) and a `ready` flag —
+    unpeeled with no edge from an unpeeled node — so a round assigns
+    this level to the ready nodes and re-derives `ready`; the loop ends
+    when none is ready: everything peeled, or only cycles (self-loops
+    included) and their downstream remain.  Rounds = DAG depth — right
+    for the shallow dependency DAGs (partOf/followedBy hierarchies) this
+    engine stores; for path-shaped graphs of depth ~|V| use
+    transitive_closure/bfs machinery instead (documented, not silently
+    slow)."""
     if on_cycle not in ("raise", "mark"):
         raise ValueError("on_cycle must be 'raise' or 'mark'")
     edges = edges.localCheckpointCut()
@@ -389,72 +340,43 @@ def topo_levels(
             out, "node string, level int"
         )
 
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpointCut()
-    )
-    remaining = (
+    # self-loops stay in: a self-loop node blocks itself forever
+    e = edges.select("src", "dst").distinct().localCheckpointCut()
+    levels = itertools.count()
+
+    def mark_ready(s: DataFrame) -> DataFrame:
+        unpeeled = s.where(F.col("level").isNull()).select(
+            F.col("node").alias("src"))
+        blocked = (
+            e.join(unpeeled, "src", "left_semi")
+            .select(F.col("dst").alias("node"), F.lit(True).alias("blocked"))
+            .distinct()
+        )
+        return s.join(blocked, "node", "left").select(
+            "node", "level",
+            (F.col("level").isNull() & F.col("blocked").isNull()).alias("ready"),
+        )
+
+    def peel(s: DataFrame) -> DataFrame:
+        lvl = next(levels)
+        return mark_ready(s.select(
+            "node",
+            F.when(F.col("ready"), F.lit(lvl)).otherwise(F.col("level")).alias("level"),
+        ))
+
+    nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpointCut()
+        .withColumn("level", F.lit(None).cast("int"))
     )
-    # self-loop nodes are on a cycle by definition — never peelable
-    selfloop = (
-        edges.where(F.col("src") == F.col("dst"))
-        .select(F.col("src").alias("node"))
-        .distinct()
-    )
-    remaining = remaining.join(selfloop, "node", "left_anti").localCheckpointCut()
-    cyclic = selfloop.localCheckpointCut()
-
-    parts: list[DataFrame] = []
-    for lvl in range(max_rounds):
-        if remaining.limit(1).count() == 0:
-            break
-        has_in = e.select(F.col("dst").alias("node")).distinct()
-        frontier = remaining.join(has_in, "node", "left_anti")
-        n_frontier = frontier.limit(1).count()
-        if n_frontier == 0:
-            # every remaining node has an unpeeled predecessor -> all
-            # remaining nodes sit on or downstream of a cycle
-            cyclic = cyclic.unionByName(remaining).localCheckpointCut()
-            remaining = remaining.limit(0)
-            break
-        parts.append(
-            frontier.withColumn("level", F.lit(lvl)).localCheckpointCut()
-        )
-        remaining = remaining.join(frontier, "node", "left_anti")
-        e = e.join(
-            frontier.select(F.col("node").alias("src")), "src", "left_anti"
-        ).localCheckpointCut()
-        remaining = remaining.localCheckpointCut()
-    else:
-        # the loop observes completion at the TOP of an iteration, so a
-        # DAG of depth exactly max_rounds exhausts the range with
-        # remaining already empty — only a truly unfinished peel raises
-        if remaining.limit(1).count() > 0:
-            raise RuntimeError(
-                f"topo peel did not finish in {max_rounds} rounds — DAG "
-                "deeper than the backstop; raise max_rounds"
-            )
-
-    spark = edges.sparkSession
-    out = parts[0] if parts else spark.createDataFrame(
-        [], "node string, level int"
-    )
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    if cyclic.limit(1).count() > 0:
-        if on_cycle == "raise":
-            sample = [r[0] for r in cyclic.limit(3).collect()]
+    out = fixpoint(mark_ready(nodes), peel, F.col("ready"), "topo_levels",
+                   max_rounds=max_rounds).select("node", "level")
+    if on_cycle == "raise":
+        sample = [r[0] for r in out.where(F.col("level").isNull()).limit(3).collect()]
+        if sample:
             raise ValueError(
                 f"cycle detected: nodes on or downstream of a directed "
                 f"cycle (e.g. {sample})"
             )
-        out = out.unionByName(
-            cyclic.withColumn("level", F.lit(None).cast("int"))
-        )
     return out

@@ -3,15 +3,13 @@
 LogSet's graph is tiny enough that rdflib answers reachability questions
 by in-memory traversal; at 10^12-turn scale the same questions (transitive
 `partOf` containment per the north_star vocabulary, entity importance)
-become distributed iterative-DataFrame problems.  Two operators:
+become distributed iterative-DataFrame problems.  Two examples:
 
 * transitive_closure — SPARQL property-path (`partOf+`) semantics via
   PATH DOUBLING: each round joins the closure with itself, so reachable
   pairs at distance <= 2^k exist after k rounds.  O(log diameter) rounds
   instead of the O(diameter) of naive one-step expansion — the difference
-  between 40 shuffles and 6 at a 10^12-edge hierarchy.  Every round ends
-  in localCheckpoint(eager=True) to truncate Catalyst lineage (the same
-  iterative-plan trap documented in cc.py / SURVEY §4).
+  between 40 shuffles and 6 at a 10^12-edge hierarchy.
 
 * pagerank_fixedpoint — fixed-iteration PageRank in 64-bit FIXED-POINT
   integer arithmetic (rank scaled by 10^12, damping 17/20, integer
@@ -21,17 +19,23 @@ become distributed iterative-DataFrame problems.  Two operators:
   reproducible across engines, partitionings, and cluster sizes — the
   determinism discipline the driver's value-hash gate demands.
 
-Both loops cross driver<->cluster once per round (a scalar count), like
-the CC fixpoint.
+Every convergence loop here (closure, BFS, shortest paths, peels,
+walks) runs through ckpt.fixpoint: one origin-cut checkpoint action per
+round, which also reads the round's changed-row count — there is no
+separate probe job — and one uniform error when a convergence cap is
+hit.  Fixed-iteration recurrences (PageRank, HITS, LPA, ANF) checkpoint
+each round directly.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..ckpt import checkpoint_cut as _checkpoint_cut  # noqa: F401 — registers df.localCheckpointCut
+from ..ckpt import fixpoint  # also registers df.localCheckpointCut
 
 # rank unit: 1.0 == 10^12.  Headroom: total rank MASS is conserved-or-
 # shrinking in this recurrence (mass_0 = N*(scale DIV N) <= scale;
@@ -105,6 +109,7 @@ def transitive_closure(
     self-join round squares the reach.  The join key is the midpoint
     node — a plain equi-join Catalyst shuffles on that key, no
     quadratics anywhere (fan-out is bounded by the true closure size).
+    A closure still growing after `max_iter` rounds raises.
 
     `small_graph_edges`: below this edge count the closure is computed
     by driver BFS instead (pass 0 to force the distributed loop — the
@@ -123,18 +128,13 @@ def transitive_closure(
             if small is not None:
                 return small
             # closure outgrew the driver cap: distributed loop below
-    c = (
-        edges.select(
-            F.col("child").alias("node"),
-            F.col("parent").alias("ancestor"),
-            F.lit(1).alias("dist"),
-        )
-        .where(F.col("node") != F.col("ancestor"))
-        .distinct()
-        .localCheckpointCut()
-    )
-    for _ in range(max_iter):
-        # (a -> m, d1) x (m -> b, d2)  =>  (a -> b, d1+d2)
+
+    def double(c: DataFrame) -> DataFrame:
+        # (a -> m, d1) x (m -> b, d2)  =>  (a -> b, d1+d2); the old dist
+        # rides the min-groupBy as `odist` (one row per pair in c, NULL
+        # on doubled rows), so "added or improved" is read in the round's
+        # own checkpoint action
+        c = c.select("node", "ancestor", "dist")
         left = c.select(
             F.col("node"), F.col("ancestor").alias("mid"), F.col("dist").alias("d1")
         )
@@ -142,27 +142,26 @@ def transitive_closure(
             F.col("node").alias("mid"), F.col("ancestor"), F.col("dist").alias("d2")
         )
         doubled = left.join(right, "mid").select(
-            "node", "ancestor", (F.col("d1") + F.col("d2")).alias("dist")
+            "node", "ancestor", (F.col("d1") + F.col("d2")).alias("dist"),
+            F.lit(None).cast("int").alias("odist"),
         )
-        new_c = (
-            c.unionByName(doubled)
+        return (
+            c.withColumn("odist", F.col("dist"))
+            .unionByName(doubled)
             .where(F.col("node") != F.col("ancestor"))
             .groupBy("node", "ancestor")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpointCut()
+            .agg(F.min("dist").alias("dist"), F.max("odist").alias("odist"))
         )
-        # converged when no pair was added AND no dist improved; pair
-        # count alone is enough for the add check, a changed-dist probe
-        # covers the rest.  One cheap anti-join probe per round.
-        grew = (
-            new_c.join(c, ["node", "ancestor", "dist"], "left_anti")
-            .limit(1)
-            .count()
-        )
-        c = new_c
-        if grew == 0:
-            break
-    return c
+
+    c = edges.select(
+        F.col("child").alias("node"),
+        F.col("parent").alias("ancestor"),
+        F.lit(1).alias("dist"),
+    ).where(F.col("node") != F.col("ancestor")).distinct()
+    return fixpoint(
+        c, double, ~F.col("dist").eqNullSafe(F.col("odist")),
+        "transitive_closure", max_rounds=max_iter,
+    ).select("node", "ancestor", "dist")
 
 
 def pagerank_fixedpoint(
@@ -451,49 +450,53 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     return labels
 
 
+def _frontier_bfs(
+    edges: DataFrame, seeds: DataFrame, max_iter: int
+) -> DataFrame:
+    """Tagged multi-source frontier BFS, the one core behind
+    bfs_distances, bfs_distances_tagged, harmonic_centrality and
+    ego_network.  edges: [src, dst] directed; seeds: [tag, node].
+    Returns [tag, node, dist] — min hops from the tag's seeds, for every
+    node within `max_iter` hops (the cap is part of the answer).
+
+    Each round expands only the `fresh` rows (last round's discoveries)
+    with one equi-join on src, drops already-settled (tag, node) pairs
+    with a left-anti join, and stops when nothing new is found — so it
+    runs eccentricity(seeds) rounds, each proportional to the frontier.
+    In hop-BFS a node's first discovery IS its minimum distance, so
+    settled pairs never need relaxing."""
+    e = edges.select("src", "dst").distinct().localCheckpointCut()
+
+    def expand(s: DataFrame) -> DataFrame:
+        front = s.where("fresh")
+        nxt = (
+            front.join(e, front["node"] == e["src"])
+            .groupBy("tag", F.col("dst").alias("node"))
+            .agg(F.min(F.col("dist") + 1).alias("dist"))
+            .join(s.select("tag", "node"), ["tag", "node"], "left_anti")
+        )
+        return s.withColumn("fresh", F.lit(False)).unionByName(
+            nxt.withColumn("fresh", F.lit(True)))
+
+    init = seeds.select("tag", "node").distinct().select(
+        "tag", "node", F.lit(0).alias("dist"), F.lit(True).alias("fresh"))
+    return fixpoint(
+        init, expand, F.col("fresh"), "frontier BFS",
+        max_rounds=max_iter, truncate=True,
+    ).drop("fresh")
+
+
 def bfs_distances(
     edges: DataFrame, sources: DataFrame, max_iter: int = 50
 ) -> DataFrame:
     """edges: DataFrame[src:string, dst:string], DIRECTED; sources:
     DataFrame[node:string].  Returns DataFrame[node:string, dist:int] —
-    minimum hop distance from ANY source, for every reachable node
-    (sources themselves at dist 0).
-
-    Multi-source frontier BFS: each round expands only the NEW frontier
-    (one equi-join on src), drops already-settled nodes with a left-anti
-    join, and stops on a one-row probe when the frontier empties — so
-    the loop runs exactly eccentricity(sources) rounds and each round's
-    work is proportional to the frontier, not the graph.  In hop-BFS a
-    node's first discovery IS its minimum distance (all edges weight 1),
-    so settled nodes never need relaxing — that's what keeps rounds
-    monotone-shrinking on hierarchy-shaped graphs.  localCheckpoint per
-    round truncates the iterative-plan lineage (SURVEY §4).
-
-    `max_iter` bounds the loop on adversarially deep graphs (a path
-    graph runs O(V) rounds — at that shape prefer transitive_closure's
-    path doubling, which this module also ships)."""
-    e = edges.select("src", "dst").distinct().localCheckpointCut()
-    dist = (
-        sources.select("node")
-        .distinct()
-        .select("node", F.lit(0).alias("dist"))
-        .localCheckpointCut()
-    )
-    frontier = dist
-    for _ in range(max_iter):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .join(dist.select("node"), "node", "left_anti")
-            .localCheckpointCut()
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        dist = dist.unionByName(nxt).localCheckpointCut()
-        frontier = nxt
-    return dist
+    minimum hop distance from ANY source, for every node within
+    `max_iter` hops (sources themselves at dist 0): _frontier_bfs with
+    one constant tag.  A path graph runs O(V) rounds — at that shape
+    prefer transitive_closure's path doubling."""
+    seeds = sources.select(F.lit("").alias("tag"), "node")
+    return _frontier_bfs(edges, seeds, max_iter).select("node", "dist")
 
 
 def kcore_peel(
@@ -505,14 +508,13 @@ def kcore_peel(
     < k, repeat); returns DataFrame[node, deg] — survivors with their
     residual degree.
 
-    rounds=None (the production default): peel TO CONVERGENCE — each
-    round starts with a one-row probe (`any node with deg < k left?`,
-    the same cheap scalar crossing the closure loop uses) and stops
-    when no node would drop, so the result is the true k-core at any
-    peel depth; a star-chain adversarial graph is pytest-pinned.
-    Unlike diameter, peel depth is usually tens, but it is UNKNOWN a
-    priori at 100x scale — which is why fixed rounds alone was flagged
-    (VERDICT r02): a too-small count silently returns a superset.
+    rounds=None (the production default): peel TO CONVERGENCE — the
+    loop stops once no node would drop, so the result is the true
+    k-core at any peel depth (a star-chain adversarial graph is
+    pytest-pinned); past `max_rounds` it raises.  Peel depth is usually
+    tens but UNKNOWN a priori at 100x scale — which is why fixed rounds
+    alone was flagged (VERDICT r02): a too-small count silently returns
+    a superset.
 
     rounds=<int>: run exactly that many rounds — the oracle-facing mode
     (the driver's value-hash gate needs a result reproducible by an
@@ -520,10 +522,10 @@ def kcore_peel(
     the fixture converges within its fixed count, so both modes agree
     there).
 
-    Each round is one groupBy (degree count) + one semi-join filter —
-    2 shuffles/round on an ever-shrinking edge set; the probe in
-    convergence mode adds one scalar job over the (checkpointed,
-    node-scale) degree table."""
+    The state is the surviving edge set annotated with both endpoint
+    degrees: each round is one degree groupBy + two joins on an
+    ever-shrinking edge set, and the rows with an endpoint under k are
+    the ones the next round drops."""
     canon = (
         edges.select(
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
@@ -532,34 +534,31 @@ def kcore_peel(
         .distinct()
         .localCheckpointCut()
     )
-    e = canon
-    to_convergence = rounds is None
-    n_rounds = max_rounds if to_convergence else rounds
-    for _ in range(n_rounds):
-        deg = (
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return (
             e.select(F.col("u").alias("node"))
             .unionByName(e.select(F.col("v").alias("node")))
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
         )
-        if to_convergence:
-            # node-scale checkpoint: the probe and the filter below both
-            # consume deg; without it the degree groupBy would run twice
-            deg = deg.localCheckpointCut()
-            if deg.where(F.col("deg") < k).limit(1).count() == 0:
-                break
-        alive = deg.where(F.col("deg") >= k).select("node")
-        e = (
-            e.join(alive.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(alive.withColumnRenamed("node", "v"), "v", "left_semi")
-            .localCheckpointCut()
-        )
-    return (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
+
+    def with_degrees(e: DataFrame) -> DataFrame:
+        deg = degrees(e)
+        return e.join(
+            deg.select(F.col("node").alias("u"), F.col("deg").alias("du")), "u"
+        ).join(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")), "v")
+
+    def peel(s: DataFrame) -> DataFrame:
+        return with_degrees(
+            s.where((F.col("du") >= k) & (F.col("dv") >= k)).select("u", "v"))
+
+    e = fixpoint(
+        with_degrees(canon), peel, (F.col("du") < k) | (F.col("dv") < k),
+        "kcore_peel", max_rounds=max_rounds if rounds is None else rounds,
+        truncate=rounds is not None,
     )
+    return degrees(e)
 
 
 def shortest_paths(
@@ -575,15 +574,16 @@ def shortest_paths(
     (sources at 0).
 
     Frontier Bellman-Ford: each round relaxes ONLY from nodes whose
-    distance improved last round (one equi-join frontier->edges, one
-    min-groupBy, one left join against the settled table) and stops on
-    a one-row probe when nothing improves — the weighted generalization
-    of bfs_distances' discipline, except a settled node CAN re-enter
-    the frontier when a cheaper path arrives later (hop order is not
-    cost order), which is why the per-round merge is min-keep rather
-    than BFS's anti-join-and-forget.  Rounds are bounded by the hop
-    count of the longest minimal path (<= V-1 without negative edges);
-    localCheckpoint per round truncates the iterative lineage.
+    distance improved last round (one equi-join frontier->edges, then
+    one min-groupBy that merges the candidates into the settled table)
+    and stops when nothing improves — the weighted generalization of
+    bfs_distances, except a settled node CAN re-enter the frontier when
+    a cheaper path arrives later (hop order is not cost order), which is
+    why the merge is min-keep rather than BFS's anti-join-and-forget.
+    The old distance rides the merge as `odist`, so the improved rows
+    (the next frontier) are exactly those with dist != odist.  Rounds
+    are bounded by the hop count of the longest minimal path (<= V-1
+    without negative edges); past `max_iter` the loop raises.
 
     At 10^12-edge scale every round is two key-shuffles over
     frontier-proportional data; for near-diameter-free graphs (the
@@ -593,37 +593,29 @@ def shortest_paths(
     ).localCheckpointCut()
     if e.where(F.col("w") < 0).limit(1).count():
         raise ValueError("shortest_paths requires non-negative weights")
-    dist = (
-        sources.select("node").distinct()
-        .select("node", F.lit(0).cast("bigint").alias("dist"))
-        .localCheckpointCut()
-    )
-    frontier = dist
-    for _ in range(max_iter):
-        cand = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"),
-                    (F.col("dist") + F.col("w")).alias("dist"))
+    improved = ~F.col("dist").eqNullSafe(F.col("odist"))
+
+    def relax(s: DataFrame) -> DataFrame:
+        front = s.where(improved)
+        cand = front.join(e, front["node"] == e["src"]).select(
+            F.col("dst").alias("node"),
+            (F.col("dist") + F.col("w")).alias("dist"),
+            F.lit(None).cast("bigint").alias("odist"),
+        )
+        return (
+            s.select("node", "dist", F.col("dist").alias("odist"))
+            .unionByName(cand)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
+            .agg(F.min("dist").alias("dist"), F.max("odist").alias("odist"))
         )
-        improved = (
-            cand.join(
-                dist.select("node", F.col("dist").alias("cur")),
-                "node", "left")
-            .where(F.col("cur").isNull() | (F.col("dist") < F.col("cur")))
-            .select("node", "dist")
-            .localCheckpointCut()
-        )
-        if improved.limit(1).count() == 0:
-            break
-        dist = (
-            dist.join(improved.select("node"), "node", "left_anti")
-            .unionByName(improved)
-            .localCheckpointCut()
-        )
-        frontier = improved
-    return dist
+
+    init = sources.select("node").distinct().select(
+        "node", F.lit(0).cast("bigint").alias("dist"),
+        F.lit(None).cast("bigint").alias("odist"),
+    )
+    return fixpoint(
+        init, relax, improved, "shortest_paths", max_rounds=max_iter
+    ).select("node", "dist")
 
 
 def neighbor_jaccard(
@@ -805,33 +797,35 @@ def deterministic_walks(
 
     Plan per step: one equi-join frontier⋈edges on the current node +
     one min_by hash-aggregate per walk (partial map-side combine, one
-    exchange per step).  Work per step is O(frontier out-degree);
-    O(n_steps) rounds total, localCheckpoint each to truncate lineage.
-    Walk count scales without limit (walks partition by walk_id); hot
-    high-out-degree nodes cost hash evaluations, never candidate
-    materialization beyond the join row stream.  Biased (node2vec p/q)
-    variants fit the same frame by weighting the hash, at the cost of
-    carrying the previous node in the frontier."""
+    exchange per step).  Work per step is O(frontier out-degree); at
+    most n_steps rounds (the budget is part of the answer), each
+    frontier checkpointed once and the output their union — never a
+    re-checkpoint of the growing corpus.  Walk count scales without
+    limit (walks partition by walk_id); hot high-out-degree nodes cost
+    hash evaluations, never candidate materialization beyond the join
+    row stream.  Biased (node2vec p/q) variants fit the same frame by
+    weighting the hash, at the cost of carrying the previous node in
+    the frontier."""
     e = edges.select("src", "dst").distinct().localCheckpointCut()
-    out = starts.select(
-        "walk_id", F.lit(0).alias("step"), "node"
-    ).localCheckpointCut()
-    frontier = out
-    for step in range(1, n_steps + 1):
-        h = F.md5(F.concat_ws(
-            ":", F.lit(salt), F.col("walk_id"), F.lit(step), F.col("dst")))
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .groupBy("walk_id")
+    fronts: list[DataFrame] = []
+
+    def advance(front: DataFrame) -> DataFrame:
+        fronts.append(front)
+        nxt = F.col("step") + 1
+        h = F.md5(F.concat_ws(":", F.lit(salt), F.col("walk_id"), nxt, F.col("dst")))
+        return (
+            front.join(e, front["node"] == e["src"])
+            .groupBy("walk_id", "step")
             .agg(F.min_by("dst", h).alias("node"))
-            .select("walk_id", F.lit(step).alias("step"), "node")
-            .localCheckpointCut()
+            .select("walk_id", nxt.alias("step"), "node")
         )
-        if nxt.limit(1).count() == 0:
-            break
-        out = out.unionByName(nxt)
-        frontier = nxt
-    return out
+
+    last = fixpoint(
+        starts.select("walk_id", F.lit(0).alias("step"), "node"),
+        advance, F.lit(True), "deterministic_walks",
+        max_rounds=n_steps, truncate=True,
+    )
+    return reduce(DataFrame.unionByName, fronts + [last])
 
 
 def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -868,37 +862,14 @@ def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
 def bfs_distances_tagged(
     edges: DataFrame, sources: DataFrame, max_iter: int = 50
 ) -> DataFrame:
-    """Per-source hop distances: like bfs_distances, but each source's
-    BFS keeps its own tag — returns DataFrame[src, node, dist] for every
-    (source, reachable node) pair.  One frontier loop runs ALL sources
-    simultaneously (the frontier carries the src column; settling is per
-    (src, node)), so the round count is max eccentricity over sources,
-    not sources x rounds.  Work per round is O(frontier out-degree)
-    summed over sources — the L-landmark trade the caller makes
-    explicitly by sizing `sources`."""
-    e = edges.select("src", "dst").distinct().localCheckpointCut()
-    dist = (
-        sources.select(F.col("node").alias("bsrc"))
-        .distinct()
-        .select("bsrc", F.col("bsrc").alias("node"), F.lit(0).alias("dist"))
-        .localCheckpointCut()
-    )
-    frontier = dist
-    for _ in range(max_iter):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select("bsrc", F.col("dst").alias("node"),
-                    (F.col("dist") + 1).alias("dist"))
-            .groupBy("bsrc", "node")
-            .agg(F.min("dist").alias("dist"))
-            .join(dist.select("bsrc", "node"), ["bsrc", "node"], "left_anti")
-            .localCheckpointCut()
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        dist = dist.unionByName(nxt).localCheckpointCut()
-        frontier = nxt
-    return dist.select(F.col("bsrc").alias("src"), "node", "dist")
+    """Per-source hop distances: _frontier_bfs tagged by source —
+    returns DataFrame[src, node, dist] for every (source, reachable
+    node) pair.  One frontier loop runs ALL sources at once, so the
+    round count is max eccentricity over sources, not sources x rounds;
+    the caller sizes `sources` (the L-landmark trade)."""
+    seeds = sources.select(F.col("node").alias("tag"), "node")
+    return _frontier_bfs(edges, seeds, max_iter).select(
+        F.col("tag").alias("src"), "node", "dist")
 
 
 def harmonic_centrality(
@@ -1160,16 +1131,17 @@ def ktruss_peel(
     surviving canonical edges with their support in the SURVIVING
     subgraph.
 
-    rounds=None (production default): peel to CONVERGENCE — each round
-    recomputes per-edge support via the degree-oriented triangle
-    enumeration and drops edges under k-2; a one-row probe ("did any
-    edge drop?") stops the loop, so unknown peel depth at 100x scale
-    cannot silently return a superset (same discipline as kcore_peel,
-    VERDICT r02 item 1).  rounds=<int>: exactly that many peel rounds —
-    the oracle-facing mode (q_ktruss unrolls the identical rounds in
+    rounds=None (production default): peel to CONVERGENCE — the state
+    is the surviving edge set annotated with its support, each round
+    drops edges under k-2 and recomputes support via the degree-oriented
+    triangle enumeration, and the loop stops once no edge is under k-2,
+    so unknown peel depth at 100x scale cannot silently return a
+    superset (same discipline as kcore_peel, VERDICT r02 item 1); past
+    `max_rounds` it raises.  rounds=<int>: exactly that many peel rounds
+    — the oracle-facing mode (q_ktruss unrolls the identical rounds in
     SQL with the NAIVE a<b<c triangle join, cross-checking the
-    orientation algebra); output support is then recomputed on the
-    survivor set so both modes share one output contract.
+    orientation algebra).  Either way the output support is the support
+    within the survivor set.
 
     Cost: one triangle enumeration per round on an ever-shrinking edge
     set — the round count is the truss peel depth (typically small; a
@@ -1185,31 +1157,19 @@ def ktruss_peel(
         .distinct()
         .localCheckpointCut()
     )
-    to_convergence = rounds is None
-    n_rounds = max_rounds if to_convergence else rounds
-    for _ in range(n_rounds):
-        sup = _edge_support(canon)
-        kept = (
-            canon.join(sup, ["u", "v"], "left")
-            .where(F.coalesce("support", F.lit(0)) >= k - 2)
-            .select("u", "v")
-            .localCheckpointCut()
+
+    def with_support(c: DataFrame) -> DataFrame:
+        return c.join(_edge_support(c), ["u", "v"], "left").select(
+            "u", "v", F.coalesce("support", F.lit(0)).alias("support")
         )
-        if to_convergence:
-            dropped = canon.join(kept, ["u", "v"], "left_anti")
-            canon = kept
-            if dropped.limit(1).count() == 0:
-                break
-        else:
-            canon = kept
-    else:
-        if to_convergence:
-            raise RuntimeError(
-                f"k-truss peel did not converge in {max_rounds} rounds"
-            )
-    sup = _edge_support(canon)
-    return canon.join(sup, ["u", "v"], "left").select(
-        "u", "v", F.coalesce("support", F.lit(0)).alias("support")
+
+    def peel(s: DataFrame) -> DataFrame:
+        return with_support(s.where(F.col("support") >= k - 2).select("u", "v"))
+
+    return fixpoint(
+        with_support(canon), peel, F.col("support") < k - 2, "ktruss_peel",
+        max_rounds=max_rounds if rounds is None else rounds,
+        truncate=rounds is not None,
     )
 
 
@@ -1248,9 +1208,9 @@ def betweenness_approx(
     meaningless anyway; document, don't mask.
 
     Scale shape: per-round work proportional to the frontier /
-    level-slice out-degree, localCheckpoint per round (lineage), the
-    single driver crossing per round is a scalar probe; the backward
-    loop reads only two adjacent level slices per step."""
+    level-slice out-degree, one checkpoint action per forward round
+    (ckpt.fixpoint; it raises past `max_iter`); the backward loop reads
+    only two adjacent level slices per step."""
     e = edges.select("src", "dst").where(
         F.col("src") != F.col("dst")
     ).distinct()
@@ -1260,42 +1220,29 @@ def betweenness_approx(
         ).distinct()
     e = e.localCheckpointCut()
 
-    state = (
-        sources.select(F.col("node").alias("bsrc"))
-        .distinct()
-        .select(
-            "bsrc",
-            F.col("bsrc").alias("node"),
-            F.lit(0).alias("dist"),
-            F.lit(1).cast("long").alias("sigma"),
-        )
-        .localCheckpointCut()
-    )
-    frontier = state
-    for _ in range(max_iter):
+    def expand(s: DataFrame) -> DataFrame:
+        front = s.where("fresh")
         nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(
-                "bsrc",
-                F.col("dst").alias("node"),
-                (F.col("dist") + 1).alias("dist"),
-                "sigma",
-            )
-            .groupBy("bsrc", "node")
-            .agg(F.min("dist").alias("dist"), F.sum("sigma").alias("sigma"))
-            .join(
-                state.select("bsrc", "node"), ["bsrc", "node"], "left_anti"
-            )
-            .localCheckpointCut()
+            front.join(e, front["node"] == e["src"])
+            .groupBy("bsrc", F.col("dst").alias("node"))
+            .agg(F.min(F.col("dist") + 1).alias("dist"),
+                 F.sum("sigma").alias("sigma"))
+            .join(s.select("bsrc", "node"), ["bsrc", "node"], "left_anti")
         )
-        if nxt.limit(1).count() == 0:
-            break
-        state = state.unionByName(nxt).localCheckpointCut()
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"betweenness forward BFS did not settle in {max_iter} rounds"
-        )
+        return s.withColumn("fresh", F.lit(False)).unionByName(
+            nxt.withColumn("fresh", F.lit(True)))
+
+    init = sources.select(F.col("node").alias("bsrc")).distinct().select(
+        "bsrc",
+        F.col("bsrc").alias("node"),
+        F.lit(0).alias("dist"),
+        F.lit(1).cast("long").alias("sigma"),
+        F.lit(True).alias("fresh"),
+    )
+    state = fixpoint(
+        init, expand, F.col("fresh"), "betweenness forward BFS",
+        max_rounds=max_iter,
+    ).drop("fresh")
 
     maxd = state.agg(F.max("dist")).first()[0] or 0
     spark = edges.sparkSession
@@ -1435,8 +1382,8 @@ def ego_network(
     `hops` of a seed (undirected reach by default) -> DataFrame[src,
     dst] of original-direction edges with both endpoints in the ball.
     The serving-side subgraph extraction for "show me the neighborhood
-    of entity X" — frontier BFS (per-round work proportional to the
-    frontier) followed by one induction semi-join per endpoint.
+    of entity X" — the ball is bfs_distances within `hops` (distances
+    dropped), followed by one induction semi-join per endpoint.
 
     max_nodes: optional hard cap — a hub seed at 10^12 edges can own a
     ball of millions; beyond the cap the operator raises rather than
@@ -1447,22 +1394,8 @@ def ego_network(
     ).distinct().localCheckpointCut()
     walk = e if directed else e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    walk = walk.localCheckpointCut()
-    ball = seeds.select("node").distinct().localCheckpointCut()
-    frontier = ball
-    for _ in range(hops):
-        nxt = (
-            frontier.join(walk, frontier["node"] == walk["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(ball, "node", "left_anti")
-            .localCheckpointCut()
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        ball = ball.unionByName(nxt).localCheckpointCut()
-        frontier = nxt
+    )
+    ball = bfs_distances(walk, seeds, max_iter=hops).select("node")
     if max_nodes is not None and ball.limit(max_nodes + 1).count() > max_nodes:
         raise ValueError(
             f"ego ball exceeds max_nodes={max_nodes}; use sample_fanout "

@@ -14,8 +14,8 @@ recovery must be a DataFrame job:
   reach table R grows only toward the true output size.  O(log L)
   shuffle rounds for the longest list L — a 10^6-element list costs 20
   equi-join rounds, never a 10^6-round sequential walk and never an
-  O(L^2) closure.  Runs to convergence with the one-row probe the
-  closure loop uses (a fixed `rounds` mode exists for the unrolled SQL
+  O(L^2) closure.  Runs to convergence on ckpt.fixpoint, raising past
+  `max_rounds` (a fixed `rounds` mode exists for the unrolled SQL
   oracle, same discipline as kcore_peel).
 * list_emit — the inverse: (head, pos, member) rows -> chain triples,
   minting cell URIs deterministically as `<head>/cell-<pos>` (pos 0
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import checkpoint_cut as _checkpoint_cut  # noqa: F401 — registers df.localCheckpointCut
+from ..ckpt import fixpoint  # also registers df.localCheckpointCut
 
 FIRST, REST, NIL = "rdf:first", "rdf:rest", "rdf:nil"
 
@@ -48,16 +48,17 @@ def list_expand(
     """triples[subj, pred, obj] -> DataFrame[head, pos:int, member].
 
     pos is 0-based order within the list.  rounds=None (production)
-    runs pointer doubling to convergence with a one-row probe per
-    round; an explicit `rounds` replays exactly that many doublings —
-    the oracle-facing mode (covers lists up to 2^rounds cells).
+    runs pointer doubling to convergence and raises if a list is still
+    growing after `max_rounds` doublings; an explicit `rounds` replays
+    exactly that many doublings — the oracle-facing mode (covers lists
+    up to 2^rounds cells).
 
     `heads_filter`: optional one-column DataFrame of head terms; only
     those lists expand.  The consumers that want a handful of
     ontology-scale lists out of a graph full of DATA lists (property
     chains, hasKey) pass their axiom objects here so the reach table —
-    and, under convergence mode, the ROUND COUNT, which the stepped
-    probe ties to the longest *selected* list — never scale with
+    and, under convergence mode, the ROUND COUNT, which is tied to the
+    longest *selected* list — never scale with
     unrelated instance lists.
     """
     # accept both the verbatim short form and the full-IRI spelling a
@@ -81,28 +82,16 @@ def list_expand(
         heads = heads.join(F.broadcast(want), "cell", "left_semi")
 
     # R: head reaches `cell` in `pos` rest-steps; J: exact 2^k jumps.
-    r = heads.select(
-        F.col("cell").alias("head"), F.col("cell"), F.lit(0).alias("pos")
-    ).localCheckpointCut()
     j = rest.select("a", "b", F.lit(1).alias("step")).localCheckpointCut()
 
-    to_convergence = rounds is None
-    n_rounds = max_rounds if to_convergence else rounds
-    for _ in range(n_rounds):
-        stepped = (
-            r.join(j, r["cell"] == j["a"])
-            .select(
-                "head",
-                F.col("b").alias("cell"),
-                (F.col("pos") + F.col("step")).alias("pos"),
-            )
+    def double(r: DataFrame) -> DataFrame:
+        nonlocal j
+        stepped = r.join(j, r["cell"] == j["a"]).select(
+            "head",
+            F.col("b").alias("cell"),
+            (F.col("pos") + F.col("step")).alias("pos"),
+            F.lit(True).alias("new"),
         )
-        if to_convergence and stepped.limit(1).count() == 0:
-            # no head extends any further: converged.  (A rest-cycle
-            # unreachable from any head keeps j nonempty forever but
-            # never feeds stepped, so the probe still terminates.)
-            break
-        r = r.unionByName(stepped).localCheckpointCut()
         # square the jump table: 2^k + 2^k = 2^(k+1); functional, so
         # this stays <= one row per cell and SHRINKS as chains end.
         j = (
@@ -115,6 +104,17 @@ def list_expand(
             )
             .localCheckpointCut()
         )
+        return r.withColumn("new", F.lit(False)).unionByName(stepped)
+
+    # converged once no head extends any further.  (A rest-cycle
+    # unreachable from any head keeps j nonempty forever but never feeds
+    # R, so the loop still terminates.)
+    r = fixpoint(
+        heads.select(F.col("cell").alias("head"), "cell", F.lit(0).alias("pos")),
+        double, F.col("new"), "list_expand",
+        max_rounds=max_rounds if rounds is None else rounds,
+        truncate=rounds is not None,
+    )
     return (
         r.join(cells, "cell")
         .select("head", F.col("pos").cast("int").alias("pos"), "member")

@@ -5828,8 +5828,8 @@ def q_kcore(spark, sf):
     convergence on this graph (the peel stabilizes in 3), so the result
     IS the 15-core.  The oracle unrolls the identical 4 rounds in SQL.
     Fixed-round is the ORACLE-facing mode only: the production default
-    (rounds=None) peels to convergence with a one-row probe per round,
-    so an unknown peel depth at scale cannot silently return a superset
+    (rounds=None) peels to convergence (ckpt.fixpoint, loud past its
+    cap), so an unknown peel depth at scale cannot silently return a superset
     (deep-peel adversary pinned in tests/test_graph.py)."""
     from .operators.graph import kcore_peel
 
@@ -7082,7 +7082,7 @@ def q_ktruss(spark, sf):
     rounds on this graph, so 4 IS the 8-truss) — surviving edges with
     their triangle support in the surviving subgraph.  Fixed-round is
     the oracle-facing mode; production default peels to convergence
-    with a one-row probe (kcore_peel discipline).  The oracle unrolls
+    on ckpt.fixpoint (kcore_peel discipline).  The oracle unrolls
     the identical rounds with the NAIVE a<b<c triangle join, so the
     degree-oriented support counting is checked against an independent
     formulation every round."""
@@ -7846,7 +7846,7 @@ def q_rdf_list(spark, sf):
     """Distributed rdf:List round-trip (operators/rdflist.py): ordered
     members -> rdf:first/rest/nil chain triples (list_emit) -> pointer-
     doubling expansion back to (head, pos, member) (list_expand,
-    convergence mode with the one-row probe).  rdf:rest is functional,
+    convergence mode on ckpt.fixpoint).  rdf:rest is functional,
     so the jump table stays linear every doubling round — O(log L)
     equi-join rounds for the longest list, never a sequential walk and
     never a quadratic closure.  The oracle computes the expected

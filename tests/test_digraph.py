@@ -117,6 +117,39 @@ def test_scc_path_graph_one_refinement_round(spark):
     }
 
 
+def test_scc_chain_with_tail_minimum_converges(spark):
+    """p00 -> ... -> p44 -> a: the backward pass moves the tail-minimum
+    label `a` one hop per round (halving cannot shortcut it), so one
+    propagation needs 46 rounds — more than any small constant cap."""
+    from logset_spark.operators.digraph import _driver_side_scc
+
+    names = [f"p{i:02d}" for i in range(45)] + ["a"]
+    df = spark.createDataFrame(
+        list(zip(names, names[1:])), "src string, dst string"
+    )
+    got = {r["node"]: r["scc"] for r in scc(df, small_graph_edges=0).collect()}
+    assert got == {r["node"]: r["scc"] for r in _driver_side_scc(df).collect()}
+
+
+def test_cc_path_with_tail_minimum_is_one_component(spark):
+    """p00 -> ... -> p29 -> a: the minimum label `a` reaches p00 only
+    after 30 rounds; a fixed round cap below that split the component."""
+    from logset_spark.operators.cc import _driver_side_cc
+
+    names = [f"p{i:02d}" for i in range(30)] + ["a"]
+    df = spark.createDataFrame(
+        list(zip(names, names[1:])), "src string, dst string"
+    )
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(df, small_graph_edges=0).collect()
+    }
+    assert got == {
+        r["node"]: r["component"] for r in _driver_side_cc(df).collect()
+    }
+    assert set(got.values()) == {"a"}
+
+
 @pytest.mark.parametrize("seed", [7, 8])
 @pytest.mark.parametrize("small", [None, 0])
 def test_topo_levels_matches_kahn_replay_on_dags(spark, seed, small):
@@ -245,7 +278,7 @@ def test_checkpoint_cut_drops_origin_and_preserves_data(spark):
 
     from pyspark.sql import functions as F
 
-    from logset_spark.ckpt import checkpoint_cut
+    from logset_spark.ckpt import checkpoint_cut, fixpoint
 
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(100)], "k int, v string"
@@ -256,17 +289,26 @@ def test_checkpoint_cut_drops_origin_and_preserves_data(spark):
     plan = cut._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan and plan.count("\n") <= 2
 
-    # chained-loop planning must stay flat: 20 rounds, each referencing
-    # the previous checkpoint 2x (the halving shape); with origin links
-    # retained this doubles per round past ~14 links.
-    labels = checkpoint_cut(df.select("k", F.col("k").alias("lab")))
-    walls = []
-    for _ in range(20):
-        t0 = time.monotonic()
+    # chained-loop planning must stay flat: 20 fixpoint rounds, each
+    # referencing the previous checkpoint 2x (the halving shape); with
+    # origin links retained this doubles per round past ~14 links.
+    stamps = []
+
+    def halve(labels):
+        stamps.append(time.monotonic())
         parent = labels.select(F.col("k").alias("lab"), F.col("lab").alias("g"))
-        labels = checkpoint_cut(
-            labels.join(parent, "lab", "left")
-            .select("k", F.least("lab", F.coalesce("g", "lab")).alias("lab"))
-        )
-        walls.append(time.monotonic() - t0)
+        return labels.join(parent, "lab", "left").select(
+            "k", F.least("lab", F.coalesce("g", "lab")).alias("lab"))
+
+    fixpoint(df.select("k", F.col("k").alias("lab")), halve, F.lit(True),
+             "halving", max_rounds=21, truncate=True)
+    walls = [b - a for a, b in zip(stamps, stamps[1:])]
+    assert len(walls) == 20
     assert max(walls[-3:]) < 10 * max(walls[2:5]) + 0.5, walls
+
+    # an empty state converges in one round: the changed count is
+    # coalesced to 0, never a NULL that would spin to the cap
+    rounds = []
+    out = fixpoint(df.limit(0), lambda s: rounds.append(1) or s,
+                   F.col("k") > 0, "empty")
+    assert rounds == [1] and out.count() == 0

@@ -360,6 +360,18 @@ def test_shortest_paths_reopens_settled_nodes(spark):
     assert got == {"a": 0, "b": 1, "c": 6, "d": 7}
 
 
+def test_shortest_paths_raises_when_cap_cuts_relaxation(spark):
+    """A 10-edge chain needs 10 relaxation rounds; a cap of 3 must fail
+    loudly rather than return the first 3 hops as if complete."""
+    from logset_spark.operators.graph import shortest_paths
+
+    edges = [(f"c{i:02d}", f"c{i + 1:02d}", 1) for i in range(10)]
+    df = spark.createDataFrame(edges, "src string, dst string, w bigint")
+    src = spark.createDataFrame([("c00",)], "node string")
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        shortest_paths(df, src, max_iter=3).collect()
+
+
 def test_shortest_paths_rejects_negative_weights(spark):
     import pytest
 
