@@ -6,33 +6,20 @@ over files one at a time (PK:src/handcoded.py; SURVEY §1.1).  Here:
 * **structural triples** are pure native column expressions — URI minting
   via concat, next-turn edges via a lag/lead window.  Whole-stage codegen,
   zero Python.
-* **mention detection** is the one genuinely non-relational step, so it is
-  a vectorized pandas UDF (Arrow-batched, per BASELINE.json north_star
-  "vectorized pandas/Arrow UDFs perform batched mention detection") that
-  scans each text batch for dictionary surface forms and ISO timestamps,
-  returning array<struct<kind,form>> that explodes natively afterwards.
-
-Scale notes: the UDF receives only (text) — keys stay JVM-side and are
-re-attached by position via posexplode-free select, so the Arrow transfer
-ships one string column, not the whole row.  The surface vocabulary rides
-an indexed broadcast (a frozenset per executor), not a per-row closure.
+* **mention detection** is a native column expression too: a
+  regexp_extract_all tokenizer, a higher-order filter keeping candidate
+  tokens, and an ISO-timestamp regexp_extract_all, returning
+  array<struct<kind,form>> that explodes natively afterwards.  No Python
+  worker runs anywhere in stage 1.
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import vocab as V
-
-# token grammar shared by synth fixtures, detector, and tests: lowercase
-# word chars with _ or - separators (entity/tool surfaces), or ISO ts
-_TOKEN_RE = re.compile(r"[a-z][a-z0-9_-]*")
-_ISO_RE = re.compile(r"\b\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\b")
 
 MENTION_TYPE = T.ArrayType(
     T.StructType(
@@ -95,26 +82,43 @@ def structural_triples(transcripts: DataFrame) -> DataFrame:
     )
 
 
-_NAMELIKE_RE = re.compile(r"^[a-z]+[_-][a-z0-9_-]+$")
-NAMELIKE_SQL = r"^[a-z]+[_-][a-z0-9_-]+$"  # keep in sync with _NAMELIKE_RE
+# Candidate-detector grammar: tokens are lowercase word chars with _ or -
+# separators (entity/tool surfaces), matched on the LOWERED text; ISO
+# timestamps are matched on the raw text with Python-re semantics: (?U)
+# makes \d any Unicode decimal digit, and the word boundary is spelled out
+# as Python's word class [\p{L}\p{N}_] — Java's (?U)\b would also count
+# combining marks and connector punctuation as word chars, but not '²'.
+TOKEN_SQL = r"([a-z][a-z0-9_-]*)"
+ISO_SQL = (
+    r"(?U)(?<![\p{L}\p{N}_])"
+    r"(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})"
+    r"(?![\p{L}\p{N}_])"
+)
+NAMELIKE_SQL = r"^[a-z]+[_-][a-z0-9_-]+$"
 
-# Cap on the auxiliary surface set the candidate detector broadcasts: only
+# Cap on the auxiliary surface set the candidate detector keeps: only
 # dictionary surfaces the name-shape regex can NOT recognize (bare single
-# words like "mainframe") need to ride to the UDF at all — typically a tiny
-# fraction of the dictionary.  Above the cap we stop collecting and fall
-# back to emitting every token, letting the broadcast join classify (same
-# semantics, wider hits arrays through the stage-1 shuffle).
-NON_NAMELIKE_CAP = 1_000_000
+# words like "mainframe") need to reach the detector at all — typically a
+# tiny fraction of the dictionary.  The set is inlined into the stage-1
+# plan as an `isin` literal, so it is planned on the driver and shipped in
+# every task.  On a 50,000-turn input (local[2], 4-vCPU host) 10,000
+# twelve-letter surfaces cost no measurable time; 100,000 made the detect
+# pass 2.5x slower (1.4 -> 3.5 s).
+# Above the cap we stop collecting and fall back to emitting every token,
+# letting the broadcast join classify (same rows, wider hits arrays
+# through the stage-1 shuffle).
+NON_NAMELIKE_CAP = 10_000
 
 
-def non_namelike_surfaces(dictionary: DataFrame, cap: int = NON_NAMELIKE_CAP):
+def non_namelike_surfaces(dictionary: DataFrame):
     """Normalized dictionary surfaces that the name-shape heuristic would
-    miss.  Returns a set (usually small), or None when it exceeds `cap` —
-    the caller must then run the detector in emit-all mode.  This replaces
-    the old full-dictionary collect: the driver never materializes more
-    than `cap` surfaces no matter how large the dictionary is."""
+    miss.  Returns a set (usually small), or None when it exceeds
+    NON_NAMELIKE_CAP — the caller must then run the detector in emit-all
+    mode.  The driver never materializes more than the cap no matter how
+    large the dictionary is."""
     from . import link as L
 
+    cap = NON_NAMELIKE_CAP  # read at call time so tests can shrink it
     rows = (
         dictionary.select(L.normalize_form(F.col("surface")).alias("s"))
         .where(~F.col("s").rlike(NAMELIKE_SQL))
@@ -128,18 +132,22 @@ def non_namelike_surfaces(dictionary: DataFrame, cap: int = NON_NAMELIKE_CAP):
 
 
 def make_candidate_detector(spark, extra_surfaces: set[str] | None):
-    """Vocabulary-light detector: emits every name-like token, every token
-    in `extra_surfaces` (non-name-like dictionary surfaces), and ISO
-    timestamps.  Entity-vs-unknown classification is decided downstream by
-    the broadcast dictionary join (unified_stage1) — the join hit IS the
+    """Vocabulary-light detector: a function text Column -> MENTION_TYPE
+    Column holding every name-like token ('cand'), every token in
+    `extra_surfaces` (non-name-like dictionary surfaces), then the ISO
+    timestamps ('ts'), each list distinct in first-occurrence order.
+    Entity-vs-unknown classification is decided downstream by the
+    broadcast dictionary join (unified_stage1) — the join hit IS the
     membership test, so the full dictionary never crosses to the driver.
 
+    One native expression: a regexp_extract_all per grammar regex, a
+    higher-order filter for the keep rule — no Python worker runs.
     `extra_surfaces=None` = emit-ALL-tokens mode (dictionary had more
     non-name-like surfaces than NON_NAMELIKE_CAP); pair it with
     unified_stage1(prefiltered=False) so the join-side filter drops
     tokens that neither hit the dictionary nor look name-like.
 
-    The keep/drop decision tests the NORMALIZED token (strip('_-') is
+    The keep rule tests the NORMALIZED token (stripping outer '_'/'-' is
     link.normalize_form restricted to the token charset) against the same
     name-shape regex the emit-all join-side filter applies to norm_form,
     and `extra_surfaces` holds normalized surfaces — so the two modes
@@ -147,79 +155,30 @@ def make_candidate_detector(spark, extra_surfaces: set[str] | None):
     tests/test_pipeline.py::test_detector_modes_agree).  Deciding on the
     raw token would diverge: 'mainframe-' normalizes to a dictionary
     surface but matches neither the raw-shape regex nor the set."""
-    bc = spark.sparkContext.broadcast(
-        frozenset(extra_surfaces) if extra_surfaces is not None else None
-    )
+    # sorted: the same set gives the same plan in every process
+    extra = sorted(extra_surfaces) if extra_surfaces is not None else None
 
-    @F.pandas_udf(MENTION_TYPE)
-    def detect(texts: pd.Series) -> pd.Series:
-        extra = bc.value
-        out = []
-        for txt in texts:
-            if txt is None:
-                out.append([])
-                continue
-            low = txt.lower()
-            found = []
-            for tok in dict.fromkeys(_TOKEN_RE.findall(low)):
-                norm = tok.strip("_-")
-                if extra is None or _NAMELIKE_RE.match(norm) or norm in extra:
-                    found.append(("cand", tok))
-            found += [("ts", iso) for iso in dict.fromkeys(_ISO_RE.findall(txt))]
-            out.append(found)
-        return pd.Series(out)
+    def keep(tok):
+        norm = F.regexp_replace(tok, r"^[_-]+|[_-]+$", "")
+        namelike = norm.rlike(NAMELIKE_SQL)
+        return namelike | norm.isin(extra) if extra else namelike
 
-    return detect
+    def tagged(kind, forms):
+        return F.transform(
+            forms, lambda f: F.struct(F.lit(kind).alias("kind"), f.alias("form"))
+        )
 
-
-def make_mention_detector(spark, surfaces: set[str], include_unknown: bool = True):
-    """Vectorized detector closed over a broadcast surface vocabulary.
-
-    Returns a pandas UDF: Series[str] -> Series[list[(kind, form)]] with
-    kind ∈ {entity, unknown, ts}: dictionary hits, name-like tokens not in
-    the dictionary (fuzzy-link candidates), ISO-timestamp literals.
-    One tokenize pass per text; set membership against the broadcast
-    frozenset is O(1) per token.
-    """
-    bc = spark.sparkContext.broadcast(frozenset(surfaces))
-
-    @F.pandas_udf(MENTION_TYPE)
-    def detect(texts: pd.Series) -> pd.Series:
-        vocab_set = bc.value
-        out = []
-        for txt in texts:
-            if txt is None:
-                out.append([])
-                continue
-            low = txt.lower()
-            found = []
-            for tok in dict.fromkeys(_TOKEN_RE.findall(low)):
-                if tok in vocab_set:
-                    found.append(("entity", tok))
-                elif include_unknown and _NAMELIKE_RE.match(tok):
-                    found.append(("unknown", tok))
-            found += [("ts", iso) for iso in dict.fromkeys(_ISO_RE.findall(txt))]
-            out.append(found)
-        return pd.Series(out)
-
-    return detect
-
-
-def unknown_token_detector():
-    """Vocabulary-free variant: every candidate token (kept for fuzzy
-    linking of forms the dictionary does not contain)."""
-
-    @F.pandas_udf(MENTION_TYPE)
-    def detect(texts: pd.Series) -> pd.Series:
-        out = []
-        for txt in texts:
-            if txt is None:
-                out.append([])
-                continue
-            out.append(
-                [("token", t) for t in dict.fromkeys(_TOKEN_RE.findall(txt.lower()))]
-            )
-        return pd.Series(out)
+    def detect(text):
+        text = F.coalesce(text, F.lit(""))  # null text -> no hits
+        toks = F.array_distinct(
+            F.regexp_extract_all(F.lower(text), F.lit(TOKEN_SQL), 1)
+        )
+        if extra is not None:
+            toks = F.filter(toks, keep)
+        isos = F.array_distinct(F.regexp_extract_all(text, F.lit(ISO_SQL), 1))
+        return F.concat(tagged("cand", toks), tagged("ts", isos)).cast(
+            MENTION_TYPE
+        )
 
     return detect
 
@@ -227,7 +186,8 @@ def unknown_token_detector():
 def mentions(transcripts: DataFrame, detector) -> DataFrame:
     """Apply the detector and explode: (conv_id, turn_idx, ts, kind, form).
 
-    Column pruning: only text + keys enter the Arrow exchange."""
+    Native end to end: the scan reads only text + keys, and the detector
+    expression and the explode run in the same codegen'd task."""
     hits = transcripts.select(
         "conv_id", "turn_idx", "ts", detector(F.col("text")).alias("hits")
     )
@@ -315,14 +275,14 @@ def unified_stage1(
 
     Plan shape (the production path — SURVEY §3.2 stage 1):
       scan (text + keys only)
-        -> detector pandas UDF map-side (text never crosses a shuffle)
+        -> native detector expression map-side (text never crosses a
+           shuffle)
         -> ONE narrow shuffle: conv_id window for followedBy (rows carry
            keys + the small hits array, not text)
         -> array-of-(subj,pred,obj,kind,form) structs -> explode
-        -> broadcast dictionary join (the exact-link scoring stage)
-    The two-leg union variant (structural_triples ∪ mentions) scans the
-    input twice and runs both legs concurrently — measured 2x slower at
-    32 cores from JVM/python-worker core contention.
+        -> broadcast dictionary join (link.exact_link / _temporal)
+    A two-leg union (structural_triples ∪ mentions) would scan the input
+    twice — measured 2x slower at 32 cores.
 
     Output is the PACKED checkpoint row set:
       * ONE turn row per input turn (pc=TURN_PC): conv_id, turn_idx, ts,
@@ -340,8 +300,6 @@ def unified_stage1(
     explode work it defers is pure codegen'd CPU, which scales with
     cores (scripts/hw_probe.py: cpu eff 0.93 vs mem eff 0.31)."""
     from . import link as L
-    from .. import vocab as V
-
     from .coref import anaphor_rlike
 
     base = transcripts.select(
@@ -389,8 +347,6 @@ def unified_stage1(
         F.col("tr.pc").alias("pc"),
         F.col("tr.obj").alias("obj"),
         F.col("tr.form").alias("form"),
-        F.when(F.col("tr.form").isNotNull(), L.normalize_form(F.col("tr.form")))
-        .alias("norm_form"),
         # per-turn attributes ride ONLY the turn row (columnar nulls are
         # ~free on the mention rows)
         F.when(is_turn, F.col("role")).alias("role"),
@@ -398,30 +354,17 @@ def unified_stage1(
         F.when(is_turn, F.col("next_idx")).alias("next_idx"),
         F.when(is_turn, F.col("is_anaphor")).alias("is_anaphor"),
     )
-    if temporal:
-        # time-valid aliases: broadcast HASH join on the surface with the
-        # validity interval as the join residual (intervals are disjoint,
-        # so the join stays at-most-1:1); mentions before a surface's
-        # first valid_from remain unlinked and flow to the fuzzy stage.
-        dim = L.temporal_surface_dictionary(dictionary)
-        cond = (
-            (exploded.norm_form == dim.surface)
-            & (exploded.ts >= dim.valid_from)
-            & (dim.valid_to.isNull() | (exploded.ts < dim.valid_to))
-        )
-        joined = exploded.join(F.broadcast(dim), cond, "left").drop(
-            "valid_from", "valid_to"
-        )
-    else:
-        dim = L.best_surface_dictionary(dictionary)
-        joined = exploded.join(
-            F.broadcast(dim), exploded.norm_form == dim.surface, "left"
-        )
+    # exact link: a broadcast dictionary join on the normalized surface
+    # (time-valid aliases join with the validity interval as the residual;
+    # mentions before a surface's first valid_from stay unlinked and flow
+    # to the fuzzy stage).  keep_norm: norm_form becomes form_key below.
+    link_exact = L.exact_link_temporal if temporal else L.exact_link
+    joined = link_exact(exploded, dictionary, keep_norm=True)
     hit = F.col("canon_uri").isNotNull()
     if not prefiltered:
         # emit-all detector mode: the join is the membership test — drop
         # tokens that neither hit the dictionary nor look name-like
-        # (exactly what the prefiltering UDF drops in the normal mode).
+        # (exactly what the prefiltering detector drops in the normal mode).
         joined = joined.where(
             F.col("form").isNull() | hit | F.col("norm_form").rlike(NAMELIKE_SQL)
         )
@@ -443,29 +386,3 @@ def unified_stage1(
         "is_anaphor",
     )
 
-
-def mention_triples(linked: DataFrame) -> DataFrame:
-    """linked: (conv_id, turn_idx, ts, kind, form, canon_uri?, score?) ->
-    turn->mentions->obj triples.  Linked mentions point at the canonical
-    URI with its score; unlinked keep a m:<form> node with conf 0.0; ts
-    mentions become ts:<iso> literals."""
-    turn_u = V.turn_uri("conv_id", "turn_idx")
-    obj = (
-        F.when(F.col("kind") == "ts", F.concat(F.lit("ts:"), F.col("form")))
-        .when(F.col("canon_uri").isNotNull(), F.col("canon_uri"))
-        .otherwise(V.mention_uri(F.col("form")))
-    )
-    conf = (
-        F.when(F.col("kind") == "ts", F.lit(1.0))
-        .when(F.col("canon_uri").isNotNull(), F.col("score"))
-        .otherwise(F.lit(0.0))
-    )
-    return linked.select(
-        turn_u.alias("subj"),
-        F.lit(V.MENTIONS).alias("pred"),
-        obj.alias("obj"),
-        "conv_id",
-        "turn_idx",
-        "ts",
-        conf.alias("conf"),
-    )

@@ -392,50 +392,3 @@ def fuzzy_link(
         .select("form", "canon_uri", "score")
     )
 
-
-def link_mentions(
-    spark,
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    fuzzy_threshold: float = 0.55,
-    timings: dict | None = None,
-) -> DataFrame:
-    """Full Stage 2: exact pass, then fuzzy pass over the exact misses,
-    merged back.  Output schema = mentions + (canon_uri, score).
-
-    `exact` is materialized (persist+count) BEFORE the fuzzy branch: the
-    fuzzy result is broadcast back onto `exact`, and a broadcast subtree
-    is evaluated separately from the probe side — without the explicit
-    materialization the whole extraction would run once per side."""
-    import time as _time
-
-    t0 = _time.monotonic()
-    # keep_norm: the normalization computed once inside exact_link is
-    # reused below for both the fuzzy-candidate projection and the
-    # re-join — never recomputed over the mention-scale table.
-    exact = exact_link(mentions, dictionary, keep_norm=True).persist()
-    exact.count()
-    if timings is not None:
-        timings["link_exact"] = round(_time.monotonic() - t0, 2)
-        t0 = _time.monotonic()
-    misses = exact.where(
-        (F.col("canon_uri").isNull()) & (F.col("kind") != "ts")
-    ).select(F.col("norm_form").alias("form")).distinct()
-    fuzzy = fuzzy_link(misses, dictionary, threshold=fuzzy_threshold).persist()
-    fuzzy.count()
-    if timings is not None:
-        timings["link_fuzzy"] = round(_time.monotonic() - t0, 2)
-
-    m = exact
-    f = fuzzy.select(
-        F.col("form").alias("norm_form"),
-        F.col("canon_uri").alias("f_canon"),
-        F.col("score").alias("f_score"),
-    )
-    out = (
-        m.join(F.broadcast(f), "norm_form", "left")
-        .withColumn("canon_uri", F.coalesce("canon_uri", "f_canon"))
-        .withColumn("score", F.coalesce("score", "f_score"))
-        .drop("f_canon", "f_score", "norm_form")
-    )
-    return out

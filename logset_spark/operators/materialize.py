@@ -82,22 +82,6 @@ def sink_partitions(
     return sorted(out)
 
 
-def dedup_triples(triples: DataFrame) -> DataFrame:
-    """Set semantics with best-conf witness: one row per (subj,pred,obj),
-    keeping max conf and min (conv_id, turn_idx, ts) provenance for
-    determinism."""
-    return triples.groupBy("subj", "pred", "obj").agg(
-        F.max("conf").alias("conf"),
-        F.min(F.struct("conv_id", "turn_idx", "ts")).alias("_prov"),
-    ).select(
-        "subj", "pred", "obj",
-        F.col("_prov.conv_id").alias("conv_id"),
-        F.col("_prov.turn_idx").alias("turn_idx"),
-        F.col("_prov.ts").alias("ts"),
-        "conf",
-    )
-
-
 def planned_partitions(transcripts: DataFrame, n_buckets: int) -> DataFrame:
     return with_layout(transcripts, n_buckets).select("ts_day", "conv_bucket").distinct()
 

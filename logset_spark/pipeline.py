@@ -10,7 +10,7 @@ manifests": a killed run resumes from the last completed stage, and within
 stage 1 / stage 4 from the last completed partition.
 
   stage 1  extract+exact-link: ONE pass over transcripts
-           (structural triples natively; detector pandas-UDF + explode +
+           (structural triples natively; native regex detector + explode +
            broadcast dictionary join for mentions) -> stage_triples,
            partitioned by conv_bucket, written mapper-direct (NO shuffle
            except the narrow followedBy window).
@@ -57,19 +57,6 @@ _TRIPLE_SCHEMA = (
     "subj string, pred string, obj string, conv_id string, "
     "turn_idx int, ts timestamp, conf double"
 )
-
-
-def _stage1_triples(
-    todo: DataFrame, dictionary: DataFrame, detector,
-    prefiltered: bool = True, temporal: bool = False,
-) -> DataFrame:
-    """Structural + exact-linked mention triples from one scan (see
-    extract.unified_stage1 for the plan shape).  Mention rows that missed
-    the dictionary carry `form_key` (normalized surface) so stage 4 can
-    rewrite them from the fuzzy links broadcast; every other row has
-    form_key null."""
-    return extract.unified_stage1(todo, detector, dictionary, prefiltered,
-                                  temporal=temporal)
 
 
 def _write_stage1(io: TableIO, run_id: str, df: DataFrame) -> None:
@@ -729,7 +716,7 @@ def build_graph(
 
     # Stage 1: extract + exact link -> checkpointed stage_triples.  The
     # detector never sees the full dictionary: only the (small) set of
-    # non-name-like surfaces rides a broadcast; entity-vs-unknown is
+    # non-name-like surfaces is inlined into it; entity-vs-unknown is
     # decided by the broadcast dictionary join inside unified_stage1, so
     # nothing dictionary-scale is ever collected to the driver.
     rows_in = 0
@@ -755,9 +742,9 @@ def build_graph(
             link_dict = dictionary.where(
                 ~link.normalize_form(F.col("surface")).isin(amb_surfaces)
             )
-        s1 = _stage1_triples(s1_todo, link_dict, detector,
-                             prefiltered=extra is not None,
-                             temporal=temporal_dictionary)
+        s1 = extract.unified_stage1(s1_todo, detector, link_dict,
+                                    prefiltered=extra is not None,
+                                    temporal=temporal_dictionary)
         if amb_surfaces:
             s1 = _apply_disambiguation(s1, amb_dict)
         _write_stage1(io, run_id, s1)

@@ -1653,8 +1653,8 @@ FROM events
 
 
 def q_mentions(spark, sf):
-    """V1 vectorized mention detector, oracle-checked: the same Arrow-
-    batched pandas UDF the KG pipeline uses for stage-1 extraction
+    """V1 mention detector, oracle-checked: the same native regex
+    expression the KG pipeline uses for stage-1 extraction
     (operators/extract.py make_candidate_detector), run in emit-all mode
     (extra_surfaces=None, the giant-dictionary fallback) over
     documents.text.  Emits per-doc unique tokens plus ISO-timestamp
@@ -5025,7 +5025,7 @@ def q_stream_linked(spark, sf):
     synthesized deterministically from events (click turns name a
     dictionary service `svc_<k%50>`, error turns a non-dictionary host
     `node-<k>`, both name-like under the detector grammar) run through
-    run_linked_available_now — mention detection (Arrow-batched UDF),
+    run_linked_available_now — mention detection (native regex detector),
     exact linking (broadcast dictionary join), fuzzy linking (no
     candidates survive 0-Jaccard between svc_/node- shingles, which the
     oracle encodes by construction), packed dedup, and the native URI

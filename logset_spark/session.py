@@ -21,10 +21,10 @@ _BASE_CONFS = {
     # All pandas-UDF stages cross JVM->Python via Arrow record batches.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-    # InferFiltersFromGenerate duplicates explode(udf(x)) into a second
-    # ArrowEvalPython node (the inferred size()>0 filter re-evaluates the
-    # UDF below the Generate) — 2x detector cost for a filter that only
-    # pays off when arrays are mostly empty, which mention hits are not.
+    # InferFiltersFromGenerate would infer a size(detect(text))>0 filter
+    # below explode(detect(text)), re-running the detector regexes beneath
+    # the Generate — 2x detector cost for a filter that only pays off when
+    # arrays are mostly empty, which mention hits are not.
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     # Deterministic oracle comparison (DuckDB timestamps are UTC-naive).

@@ -124,7 +124,7 @@ def session_counts(
 def streaming_dedup(triples: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """At-least-once sources re-deliver rows; dropDuplicatesWithinWatermark
     keeps (subj,pred,obj) state only inside the watermark horizon so state
-    size is bounded (the streaming twin of batch dedup_triples)."""
+    size is bounded (the streaming twin of batch pipeline.dedup_packed)."""
     return triples.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["subj", "pred", "obj"]
     )

@@ -113,9 +113,10 @@ def test_resume_after_stage1_kill(spark, tmp_path):
 
     # killed-after-stage-1 run: stage 1 + its manifest only
     io_kill = TableIO(str(tmp_path / "wh_kill"), n_buckets=4)
-    surfaces = set(dpdf.surface)
-    det = extract.make_mention_detector(spark, surfaces, include_unknown=True)
-    P._write_stage1(io_kill, "crashy", P._stage1_triples(tdf, ddf, det))
+    det = extract.make_candidate_detector(
+        spark, extract.non_namelike_surfaces(ddf)
+    )
+    P._write_stage1(io_kill, "crashy", extract.unified_stage1(tdf, det, ddf))
     materialize.mark_buckets_done(
         io_kill, "crashy", P.STAGE1,
         materialize.sink_buckets(io_kill, P._stage_name("crashy")),
@@ -157,14 +158,15 @@ def test_resume_partial_bucket_crash(spark, tmp_path):
     )
 
     io_kill = TableIO(str(tmp_path / "whk"), n_buckets=4)
-    surfaces = set(dpdf.surface)
-    det = extract.make_mention_detector(spark, surfaces, include_unknown=True)
+    det = extract.make_candidate_detector(
+        spark, extract.non_namelike_surfaces(ddf)
+    )
     from pyspark.sql import functions as FF
 
     only = tdf.where(
         FF.pmod(FF.xxhash64("conv_id"), FF.lit(4)).cast("int").isin([0, 1])
     )
-    P._write_stage1(io_kill, "crashy2", P._stage1_triples(only, ddf, det))
+    P._write_stage1(io_kill, "crashy2", extract.unified_stage1(only, det, ddf))
     done = [
         b for b in materialize.sink_buckets(io_kill, P._stage_name("crashy2"))
         if b in (0, 1)
@@ -299,6 +301,34 @@ def test_detector_modes_agree(spark):
     assert a == b
     # and the normalized trailing-punct token actually linked
     assert any(r[3] == "ent:mainframe" for r in a)
+
+
+def test_non_namelike_overflow_falls_back_to_emit_all(spark, tmp_path, monkeypatch):
+    """More non-name-like surfaces than NON_NAMELIKE_CAP: the set is not
+    collected (None), build_graph runs the detector in emit-all mode, and
+    the triples it writes equal the prefiltered run's."""
+    from logset_spark.operators import extract
+
+    tdf = spark.createDataFrame(
+        synth.transcripts_pdf(n_convs=8), schema=synth.TRANSCRIPT_SCHEMA
+    )
+    ddf = spark.createDataFrame(
+        synth.entity_dictionary_pdf(), schema=synth.DICT_SCHEMA
+    )
+
+    def triples(run_id):
+        io = TableIO(str(tmp_path / run_id), n_buckets=4)
+        build_graph(spark, tdf, ddf, io, run_id=run_id)
+        cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "ts", "conf"]
+        return (
+            io.read(spark, "triples").select(*cols).toPandas()
+            .sort_values(cols).reset_index(drop=True)
+        )
+
+    want = triples("pre")
+    monkeypatch.setattr(extract, "NON_NAMELIKE_CAP", 0)
+    assert extract.non_namelike_surfaces(ddf) is None
+    pd.testing.assert_frame_equal(triples("all"), want)
 
 
 def test_sparql_over_built_warehouse(spark, tmp_path):

@@ -81,18 +81,26 @@ def test_topk_uses_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan  # not a global sort
 
 
-def test_mention_path_ships_only_text_over_arrow(spark, sf_dir):
-    """The detector UDF's Arrow exchange must carry text + keys, never
-    the full row (extract.mentions docstring)."""
-    tr = derived_transcripts(spark, sf_dir)
-    det = extract.make_mention_detector(spark, {"alpha"}, include_unknown=False)
-    plan = _plan(extract.mentions(tr, det))
-    arrow_lines = [l for l in plan.splitlines() if "ArrowEvalPython" in l]
-    assert arrow_lines, "expected a vectorized (Arrow) python stage"
-    assert "pandas_udf" not in plan.lower() or True  # plan label varies
-    # role/text/tool columns are pruned before the exchange: the project
-    # feeding Arrow holds conv_id, turn_idx, ts, text only
-    assert "role" not in arrow_lines[0]
+def test_stage1_runs_no_python(spark, sf_dir):
+    """Stage 1 (detector, followedBy window, exact-link join) is native
+    end to end in both detector modes: no Python eval node anywhere in
+    the unified_stage1 plan, and each detector regex runs once."""
+    from logset_spark.sources import synth
+
+    # a file scan: a local relation would fold the detector away
+    tdf = derived_transcripts(spark, sf_dir)
+    ddf = spark.createDataFrame(
+        synth.entity_dictionary_pdf(), schema=synth.DICT_SCHEMA
+    )
+    extra = extract.non_namelike_surfaces(ddf)
+    for det_set, prefiltered in ((extra, True), (None, False)):
+        s1 = extract.unified_stage1(
+            tdf, extract.make_candidate_detector(spark, det_set), ddf,
+            prefiltered=prefiltered,
+        )
+        plan = _plan(s1)
+        assert "EvalPython" not in plan, prefiltered
+        assert plan.count("regexp_extract_all") == 2, plan
 
 
 def test_aqe_and_arrow_enabled(spark):
@@ -171,14 +179,16 @@ def test_write_sorts_packed_rows_once(spark, tmp_path):
 
 
 def test_detector_evaluated_once_under_explode(spark, sf_dir):
-    """InferFiltersFromGenerate would clone explode(udf(text)) into a
-    second ArrowEvalPython (the inferred size()>0 filter re-runs the
-    detector below the Generate) — 2x Arrow transfer + 2x Python CPU on
-    the extraction path.  The rule is excluded in session.py; assert the
-    plan carries exactly ONE Python eval node."""
+    """InferFiltersFromGenerate would clone explode(detect(text)) into an
+    inferred size()>0 filter below the Generate, re-running the detector
+    regexes — 2x detector cost on the extraction path.  The rule is
+    excluded in session.py; assert the plan evaluates each detector regex
+    exactly once and runs no Python."""
     fn, _ = REGISTRY["q_mentions"]
     plan = _plan(fn(spark, sf_dir))
-    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "EvalPython" not in plan, plan
+    # one per detector regex: the token grammar and the ISO timestamp
+    assert plan.count("regexp_extract_all") == 2, plan
 
 
 def test_salted_write_reuses_exchange_for_dedup(spark):
@@ -430,7 +440,7 @@ def test_coref_stage_single_data_exchange(spark, tmp_path):
     detector = extract.make_candidate_detector(
         spark, extract.non_namelike_surfaces(ddf)
     )
-    s1 = P._stage1_triples(tdf, ddf, detector)
+    s1 = extract.unified_stage1(tdf, detector, ddf)
     P._write_stage1(io, run_id, s1)
     links = P._fuzzy_links(spark, io, run_id, ddf, 0.55).persist()
     links.count()

@@ -6,9 +6,11 @@ kept small and deadline=None; the *driver-side* numerics (minhash params,
 gram hashing) get wider hypothesis coverage since they run in-process.
 """
 
+import re
+
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 import networkx as nx
 from pyspark.sql import functions as F
@@ -143,6 +145,68 @@ def test_char_ngrams_native_matches_python(spark, s):
         )
     )
     assert sorted(got) == sorted(expect)
+
+
+# ---------------------------------------------------------------------------
+# native mention detector == the Python-re grammar it replaced
+# ---------------------------------------------------------------------------
+
+_TOKEN_RE = re.compile(r"[a-z][a-z0-9_-]*")
+_ISO_RE = re.compile(r"\b\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\b")
+_NAMELIKE_RE = re.compile(r"^[a-z]+[_-][a-z0-9_-]+$")
+
+
+def _reference_detect(txt, extra):
+    """The candidate-detector grammar in plain Python (str.lower, Unicode
+    re): distinct kept tokens, then distinct ISO timestamps."""
+    if txt is None:
+        return []
+    found = []
+    for tok in dict.fromkeys(_TOKEN_RE.findall(txt.lower())):
+        norm = tok.strip("_-")
+        if extra is None or _NAMELIKE_RE.match(norm) or norm in extra:
+            found.append(("cand", tok))
+    return found + [("ts", iso) for iso in dict.fromkeys(_ISO_RE.findall(txt))]
+
+
+# ASCII plus the cases where Java and Python differ unless the detector
+# pins them: Kelvin sign and dotted capital I (lower() yields ASCII k / i),
+# Arabic-Indic digits (\d), precomposed and combining e-acute, superscript
+# two and the undertie connector (\b)
+_TS = "2024-01-02T03:04:05"
+_TS_ARABIC = _TS.translate({ord(d): 0x0660 + int(d) for d in "0123456789"})
+_UNICODE = "\u212a\u0130\u0660\u0662\u0669\u00e9\u0301\u00b2\u203f"
+_DETECTOR_PIECES = st.one_of(
+    st.text(alphabet="abcdeikstxyzAKTX019_- :" + _UNICODE, max_size=8),
+    st.sampled_from(
+        [_TS, _TS_ARABIC, "data_mover", "mainframe-", "a_-", "ab", "x-1"]
+    ),
+)
+
+
+@settings(max_examples=15, deadline=None)
+@given(texts=st.lists(
+    st.one_of(st.none(), st.lists(_DETECTOR_PIECES, max_size=6).map("".join)),
+    min_size=1, max_size=30,
+))
+@example(texts=[None, "", _TS_ARABIC, "\u212aelvin data_mover \u0130x"]
+         + [c + _TS for c in _UNICODE] + [_TS + c for c in _UNICODE])
+def test_candidate_detector_matches_python_grammar(spark, texts):
+    """make_candidate_detector (native regexes, Java lower()) returns
+    exactly the reference's hits, order included, in emit-all (None),
+    name-shape-only (empty set) and prefiltered (non-empty set) modes."""
+    from logset_spark.operators import extract
+
+    extras = [None, set(), {"a", "ab", "k", "mainframe"}]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    rows = df.select(*(
+        extract.make_candidate_detector(spark, extra)(F.col("text")).alias(f"h{i}")
+        for i, extra in enumerate(extras)
+    )).collect()
+    for txt, row in zip(texts, rows):
+        for i, extra in enumerate(extras):
+            got = [(h["kind"], h["form"]) for h in row[f"h{i}"]]
+            assert got == _reference_detect(txt, extra), (txt, extra)
 
 
 # ---------------------------------------------------------------------------
