@@ -88,7 +88,9 @@ def fixpoint(
     Past the cap the loop raises ``RuntimeError("<name> did not converge
     in N rounds")`` — unless ``truncate``: then the cap is part of the
     answer (a hop or step budget, an oracle's fixed round count) and the
-    state after N rounds is returned."""
+    state after N rounds is returned.  ``changed=F.lit(True)`` with
+    ``truncate`` is the fixed-round idiom: exactly ``max_rounds`` rounds,
+    fewer only if a round yields no rows."""
     rows = Observation()
     state = checkpoint_cut(state.observe(rows, F.count(F.lit(1)).alias("n")))
     cap = max(rows.get["n"], 1) if max_rounds is None else max_rounds

@@ -32,10 +32,14 @@ def _bidirect(edges: DataFrame) -> DataFrame:
     return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
-# Driver-path ceiling: 250k edges x ~(2 python str objects + dict slots)
-# ≈ low hundreds of MB of driver heap worst-case — a safe spike on any
-# sane driver.  (2M edges was flagged as a multi-GB spike right at the
-# threshold: ~100 B/row of payload is dwarfed by CPython object overhead.)
+# Driver-path ceiling, shared by CC, SCC, topo levels and the closure:
+# below it the edge list collects to the driver and an exact union-find /
+# Tarjan / Kahn / BFS runs in microseconds, while the iterative DataFrame
+# loops cost ~0.5s of scheduling per round regardless of size.  250k
+# edges x ~(2 python str objects + dict slots) ≈ low hundreds of MB of
+# driver heap worst-case — a safe spike on any sane driver.  (2M edges
+# was flagged as a multi-GB spike right at the threshold: ~100 B/row of
+# payload is dwarfed by CPython object overhead.)
 SMALL_GRAPH_EDGES = 250_000
 
 

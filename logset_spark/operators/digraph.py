@@ -20,12 +20,15 @@ SCC algorithm — block refinement with min-label propagation:
   one block).  Each outer round, within every block in parallel:
     fwd(v) = min node id that reaches v on a path inside the block
     bwd(v) = min node id v reaches on a path inside the block
-  both computed by min-label propagation along (reversed) edges with
-  POINTER HALVING (lab <- min(lab, lab[lab]), as in cc.py).  Halving
-  helps only when labels point at nodes that already hold smaller
-  labels; a chain whose minimum sits at its tail still moves that label
-  one hop per round, so a propagation may take up to n rounds over n
-  nodes — the cap, taken from the node count, never trips.
+  both computed by ONE tagged min-label propagation (tag 0 along the
+  edges, tag 1 along them reversed — the tagged-state shape of
+  _frontier_bfs in graph.py) with POINTER HALVING (lab <- min(lab,
+  lab[lab]), as in cc.py), so an outer round runs one fixpoint loop
+  and no driver threads.  Halving helps only when labels point at
+  nodes that already hold smaller labels; a chain whose minimum sits
+  at its tail still moves that label one hop per round, so a
+  propagation may take up to n rounds over n nodes — the cap, taken
+  from the (tag, node) row count, never trips.
   Every node with fwd(v) == bwd(v) == m is assigned scc = m (m reaches
   v and v reaches m, so v is in SCC(m) — sound unconditionally).  The
   survivors re-block on the key (block, fwd, bwd): nodes of one SCC
@@ -50,17 +53,12 @@ the whole assignment.
 from __future__ import annotations
 
 import itertools
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ckpt import fixpoint  # also registers df.localCheckpointCut
-
-# Mirrors cc.SMALL_GRAPH_EDGES: below this the edge list collects to the
-# driver and an exact Tarjan/Kahn runs in microseconds; the iterative
-# DataFrame loops cost ~0.5s of scheduling per round regardless of size.
-SMALL_GRAPH_EDGES = 250_000
+from .cc import SMALL_GRAPH_EDGES
 
 
 # --------------------------------------------------------------------------
@@ -173,52 +171,60 @@ def _driver_side_topo(
 
 
 def _min_reach_labels(e: DataFrame, nodes: DataFrame) -> DataFrame:
-    """min-label propagation to fixpoint along e (src -> dst), with
-    pointer halving.  nodes: DataFrame[node]; e: DataFrame[src, dst],
-    every endpoint present in nodes, all edges inside one refinement
-    block per edge by construction.  Returns DataFrame[node, lab] where
-    lab = min node id with a directed path to `node` (reflexive).
+    """Tagged min-label propagation to fixpoint along e (src -> dst),
+    with pointer halving.  nodes: DataFrame[tag, node]; e:
+    DataFrame[tag, src, dst], every endpoint present in nodes under the
+    edge's tag, all edges inside one refinement block by construction.
+    Returns DataFrame[tag, node, lab] where lab = min node id with a
+    directed path to `node` (reflexive) over the edges of that tag.
+    Tags never mix: every join and groupBy keys on the tag, so one loop
+    runs independent propagations side by side and stops when all of
+    them have settled.
 
     Invariant that makes halving sound: lab(v) is always an ancestor of
     v inside the block (init self; adoption moves labels one edge
     forward; lab(lab(v)) is an ancestor of an ancestor).  Halving never
     slows the plain one-hop-per-round propagation, which settles within
     (longest shortest path to the minimum ancestor) + 1 <= n rounds, so
-    the fixpoint's node-count cap is never hit — though a chain whose
+    the fixpoint's row-count cap is never hit — though a chain whose
     minimum sits at its tail still needs one round per hop.
 
     One Spark action per round: the old label rides the union+groupBy
-    as `olab` (each node occurs exactly once in `labels`, so max(olab)
-    recovers it; neighbor rows contribute NULL) and the changed count is
-    read by the round's own checkpoint (ckpt.fixpoint)."""
+    as `olab` (each (tag, node) occurs exactly once in `labels`, so
+    max(olab) recovers it; neighbor rows contribute NULL) and the
+    changed count is read by the round's own checkpoint
+    (ckpt.fixpoint)."""
 
     def step(labels: DataFrame) -> DataFrame:
-        labels = labels.select("node", "lab")
+        labels = labels.select("tag", "node", "lab")
         nbr = e.join(
-            labels.select(F.col("node").alias("src"), "lab"), "src"
+            labels.select("tag", F.col("node").alias("src"), "lab"),
+            ["tag", "src"],
         ).select(
+            "tag",
             F.col("dst").alias("node"),
             "lab",
             F.lit(None).cast("string").alias("olab"),
         )
         stepped = (
-            labels.select("node", "lab", F.col("lab").alias("olab"))
+            labels.select("tag", "node", "lab", F.col("lab").alias("olab"))
             .unionByName(nbr)
-            .groupBy("node")
+            .groupBy("tag", "node")
             .agg(F.min("lab").alias("lab"), F.max("olab").alias("olab"))
         )
         parent = labels.select(
-            F.col("node").alias("lab"), F.col("lab").alias("grand")
+            "tag", F.col("node").alias("lab"), F.col("lab").alias("grand")
         )
-        return stepped.join(parent, "lab", "left").select(
-            "node", F.least(F.col("lab"), F.coalesce("grand", "lab")).alias("lab"),
+        return stepped.join(parent, ["tag", "lab"], "left").select(
+            "tag", "node",
+            F.least(F.col("lab"), F.coalesce("grand", "lab")).alias("lab"),
             "olab",
         )
 
     return fixpoint(
         nodes.withColumn("lab", F.col("node")), step,
         ~F.col("lab").eqNullSafe(F.col("olab")), "SCC label propagation",
-    ).select("node", "lab")
+    ).select("tag", "node", "lab")
 
 
 def scc(
@@ -238,10 +244,17 @@ def scc(
     if edges.limit(limit + 1).count() <= limit:
         return _driver_side_scc(edges)
 
-    e = (
+    # tag 0 carries the edges forward (fwd labels), tag 1 reversed (bwd)
+    fwd = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
+    )
+    e = (
+        fwd.select(F.lit(0).alias("tag"), "src", "dst")
+        .unionByName(fwd.select(F.lit(1).alias("tag"),
+                                F.col("dst").alias("src"),
+                                F.col("src").alias("dst")))
         .localCheckpointCut()
     )
     refined = itertools.count()
@@ -261,17 +274,15 @@ def scc(
                 .join(blk.select(F.col("node").alias("dst"),
                                  F.col("blk").alias("dblk")), "dst")
                 .where(F.col("sblk") == F.col("dblk"))
-                .select("src", "dst")
+                .select("tag", "src", "dst")
                 .localCheckpointCut()
             )
-        nodes = live.select("node")
-        rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        # fwd and bwd are independent propagations: run them on two
-        # driver threads so their per-round job latencies overlap
-        f_fwd = pool.submit(_min_reach_labels, e, nodes)
-        f_bwd = pool.submit(_min_reach_labels, rev, nodes)
-        both = f_fwd.result().join(
-            f_bwd.result().withColumnRenamed("lab", "blab"), "node")
+        labs = _min_reach_labels(e, live.select(
+            F.explode(F.array(F.lit(0), F.lit(1))).alias("tag"), "node"))
+        both = labs.groupBy("node").agg(
+            F.max(F.when(F.col("tag") == 0, F.col("lab"))).alias("lab"),
+            F.max(F.when(F.col("tag") == 1, F.col("lab"))).alias("blab"),
+        )
         # re-block on (fwd, bwd); the old block is implied — edges never
         # cross blocks, so refining by the per-block labels refines the
         # old partition
@@ -288,9 +299,8 @@ def scc(
         .select("node", F.lit("").alias("blk"),
                 F.lit(None).cast("string").alias("scc"))
     )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        out = fixpoint(init, refine, F.col("scc").isNull(),
-                       "SCC block refinement", max_rounds=max_rounds)
+    out = fixpoint(init, refine, F.col("scc").isNull(),
+                   "SCC block refinement", max_rounds=max_rounds)
     return out.select("node", "scc")
 
 

@@ -18,24 +18,30 @@ become distributed iterative-DataFrame problems.  Two examples:
   against another engine; integer math makes every iteration exactly
   reproducible across engines, partitionings, and cluster sizes — the
   determinism discipline the driver's value-hash gate demands.
+  PageRank is personalized PageRank (ppr_fixedpoint) with every node a
+  source; both run on one core.
 
-Every convergence loop here (closure, BFS, shortest paths, peels,
-walks) runs through ckpt.fixpoint: one origin-cut checkpoint action per
-round, which also reads the round's changed-row count — there is no
-separate probe job — and one uniform error when a convergence cap is
-hit.  Fixed-iteration recurrences (PageRank, HITS, LPA, ANF) checkpoint
-each round directly.
+Every iterative loop here runs through ckpt.fixpoint: one origin-cut
+checkpoint action per round, which also reads the round's changed-row
+count — there is no separate probe job — and one uniform error when a
+convergence cap is hit.  Fixed-round recurrences (PageRank, HITS, LPA,
+ANF, walks) pass `F.lit(True)` as the changed predicate with their
+round count as a truncating cap.  The one exception is the backward
+level sweep of betweenness_approx, whose rounds walk a known depth
+down to 0.
 """
 
 from __future__ import annotations
 
+import itertools
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..ckpt import fixpoint  # also registers df.localCheckpointCut
+from .cc import SMALL_GRAPH_EDGES
 
 # rank unit: 1.0 == 10^12.  Headroom: total rank MASS is conserved-or-
 # shrinking in this recurrence (mass_0 = N*(scale DIV N) <= scale;
@@ -49,13 +55,6 @@ from ..ckpt import fixpoint  # also registers df.localCheckpointCut
 # fixed-point resolution on ~1e12-node graphs stays safe (needed because
 # rank_0 = scale DIV N must be >> 0 for the recurrence to carry signal).
 PR_SCALE = 1_000_000_000_000
-
-
-# below this many edges the closure runs as driver-side BFS (same
-# pattern, threshold, and rationale as cc.SMALL_GRAPH_EDGES: ~20 Spark
-# jobs of fixpoint overhead dwarf a tiny graph; the distributed loop is
-# what runs at catalog scale and q_closure pins it on for the oracle)
-SMALL_CLOSURE_EDGES = 250_000
 
 
 # a small EDGE count does not bound the CLOSURE size: a deep/dense DAG
@@ -94,7 +93,7 @@ def _closure_small(spark, rows: list, max_pairs: int) -> DataFrame | None:
 
 def transitive_closure(
     edges: DataFrame, max_iter: int = 20,
-    small_graph_edges: int = SMALL_CLOSURE_EDGES,
+    small_graph_edges: int = SMALL_GRAPH_EDGES,
     max_small_pairs: int = MAX_SMALL_CLOSURE_PAIRS,
 ) -> DataFrame:
     """edges: DataFrame[child:string, parent:string] (a DAG; cycles would
@@ -111,10 +110,12 @@ def transitive_closure(
     quadratics anywhere (fan-out is bounded by the true closure size).
     A closure still growing after `max_iter` rounds raises.
 
-    `small_graph_edges`: below this edge count the closure is computed
-    by driver BFS instead (pass 0 to force the distributed loop — the
-    oracle-checked q_closure does, so the doubling algebra itself stays
-    under test; both paths are equivalence-tested in tests/test_graph).
+    `small_graph_edges`: below this edge count (default
+    cc.SMALL_GRAPH_EDGES) the closure is computed by driver BFS instead,
+    since ~20 Spark jobs of fixpoint overhead dwarf a tiny graph.  Pass
+    0 to force the distributed loop — the oracle-checked q_closure
+    does, so the doubling algebra itself stays under test; both paths
+    are equivalence-tested in tests/test_graph.
     BFS gives min-HOP distance and path doubling min over all walks of
     per-round-minimal splits — equal exactly because doubling keeps the
     per-pair MIN each round, so a shortest 2^k-bounded decomposition
@@ -164,6 +165,63 @@ def transitive_closure(
     ).select("node", "ancestor", "dist")
 
 
+def _distinct_edges_and_nodes(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Checkpointed distinct [src, dst] edges and their endpoint [node]s."""
+    e = edges.select("src", "dst").distinct().localCheckpointCut()
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpointCut()
+    )
+    return e, nodes
+
+
+def _rank_rounds(
+    e: DataFrame, flagged: DataFrame, n_src: DataFrame, n_iter: int,
+    scale: int,
+) -> DataFrame:
+    """The exact-integer (personalized) PageRank core: `n_iter` rounds
+    on ckpt.fixpoint over state [node, rank].  e: distinct [src, dst];
+    flagged: [node, is_src] for every node, is_src 1 on a teleport
+    source; n_src: the 1-row teleport count [n_src], joined as a
+    broadcast — never a driver collect."""
+    outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
+    # 17x DIV 20 via the overflow-free split identity
+    damped = F.expr(
+        "17 * (coalesce(in_sum, CAST(0 AS BIGINT)) DIV 20)"
+        " + (17 * (coalesce(in_sum, CAST(0 AS BIGINT)) % 20)) DIV 20"
+    )
+
+    def teleport(mass: str) -> Column:
+        return F.expr(
+            f"CASE WHEN is_src = 1 THEN {mass} ELSE CAST(0 AS BIGINT) END"
+        )
+
+    def step(ranks: DataFrame) -> DataFrame:
+        contrib = (
+            e.join(ranks.withColumnRenamed("node", "src"), "src")
+            .join(outdeg, "src")
+            .select("dst", F.expr("rank DIV od").alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("in_sum"))
+        )
+        return (
+            flagged.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
+            .crossJoin(F.broadcast(n_src))
+            .select("node", (
+                teleport(f"CAST(3 * {scale} AS BIGINT) DIV (20 * n_src)")
+                + damped
+            ).alias("rank"))
+        )
+
+    init = flagged.crossJoin(F.broadcast(n_src)).select(
+        "node", teleport(f"CAST({scale} AS BIGINT) DIV n_src").alias("rank")
+    )
+    return fixpoint(init, step, F.lit(True), "pagerank",
+                    max_rounds=n_iter, truncate=True)
+
+
 def pagerank_fixedpoint(
     edges: DataFrame, n_iter: int = 3, scale: int = PR_SCALE
 ) -> DataFrame:
@@ -178,9 +236,11 @@ def pagerank_fixedpoint(
         rank_k+1(v) = (3*scale) DIV (20*N)
                       + (17 * sum_{u->v} (rank_k(u) DIV outdeg(u))) DIV 20
 
-    The damping multiply is evaluated as the exact bigint identity
-    17x DIV 20 = 17*(x DIV 20) + (17*(x MOD 20)) DIV 20 so no
-    intermediate exceeds x itself (see PR_SCALE headroom note).
+    — ppr_fixedpoint's recurrence with every node a source, so both run
+    on one core (_rank_rounds).  The damping multiply is evaluated as
+    the exact bigint identity 17x DIV 20 = 17*(x DIV 20) +
+    (17*(x MOD 20)) DIV 20 so no intermediate exceeds x itself (see
+    PR_SCALE headroom note).
 
     DIV is truncating integer division (all quantities non-negative, so
     it equals floor).  Dangling-node mass is dropped, not redistributed —
@@ -188,52 +248,14 @@ def pagerank_fixedpoint(
     recurrence (see SQL_PAGERANK for the DuckDB replay).
 
     Plan shape per iteration: one shuffle for the contribution groupBy
-    on dst, one broadcast-sized join back to the node list; outdeg and N
-    are computed once.  localCheckpoint per round truncates lineage.
-    """
-    e = edges.select("src", "dst").distinct().localCheckpointCut()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpointCut()
+    on dst, one join back to the node list; outdeg and N are computed
+    once.  The source flag is a literal 1, so the node list is never
+    broadcast."""
+    e, nodes = _distinct_edges_and_nodes(edges)
+    return _rank_rounds(
+        e, nodes.withColumn("is_src", F.lit(1)),
+        nodes.agg(F.count("*").alias("n_src")), n_iter, scale,
     )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
-    # N rides as a broadcast 1-row aggregate — never a driver collect.
-    n_nodes = nodes.agg(F.count("*").alias("n_nodes"))
-    ranks = (
-        nodes.crossJoin(F.broadcast(n_nodes))
-        .select(
-            "node",
-            F.expr(f"CAST({scale} AS BIGINT) DIV n_nodes").alias("rank"),
-        )
-        .localCheckpointCut()
-    )
-    for _ in range(n_iter):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select("dst", F.expr("rank DIV od").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .crossJoin(F.broadcast(n_nodes))
-            .select(
-                "node",
-                (
-                    F.expr(f"CAST(3 * {scale} AS BIGINT) DIV (20 * n_nodes)")
-                    # 17x DIV 20 via the overflow-free split identity
-                    + F.expr(
-                        "17 * (coalesce(in_sum, CAST(0 AS BIGINT)) DIV 20)"
-                        " + (17 * (coalesce(in_sum, CAST(0 AS BIGINT)) % 20)) DIV 20"
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpointCut()
-        )
-    return ranks
 
 
 def ppr_fixedpoint(
@@ -251,69 +273,22 @@ def ppr_fixedpoint(
         rank_k+1(v) = [v in S] * (3*scale) DIV (20*|S|)
                       + (17 * sum_{u->v} (rank_k(u) DIV outdeg(u))) DIV 20
 
-    Same overflow-free 17x DIV 20 split, same dropped dangling mass,
-    same one-shuffle-per-iteration plan as pagerank_fixedpoint; the
-    source membership flag rides a broadcast left-join (|S| is query-
-    scale, not corpus-scale), |S| a broadcast 1-row aggregate.  Exactly
-    replayable in SQL — see SQL_PPR.  Nodes never reached keep rank 0
-    and ARE returned (the caller filters), so the output domain is
-    engine-independent."""
-    e = edges.select("src", "dst").distinct().localCheckpointCut()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpointCut()
-    )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
+    |S| counts the distinct sources, including any absent from the
+    graph.  The source membership flag rides a broadcast left-join (|S|
+    is query-scale, not corpus-scale), |S| a broadcast 1-row aggregate.
+    Exactly replayable in SQL — see SQL_PPR.  Nodes never reached keep
+    rank 0 and ARE returned (the caller filters), so the output domain
+    is engine-independent."""
+    e, nodes = _distinct_edges_and_nodes(edges)
     src_flag = sources.select(F.col("node")).distinct().withColumn(
         "is_src", F.lit(1)
     )
-    n_src = src_flag.agg(F.count("*").alias("n_src"))
     flagged = nodes.join(F.broadcast(src_flag), "node", "left").select(
         "node", F.coalesce("is_src", F.lit(0)).alias("is_src")
     )
-    ranks = (
-        flagged.crossJoin(F.broadcast(n_src))
-        .select(
-            "node",
-            F.expr(
-                f"CASE WHEN is_src = 1 THEN CAST({scale} AS BIGINT) DIV n_src"
-                " ELSE CAST(0 AS BIGINT) END"
-            ).alias("rank"),
-        )
-        .localCheckpointCut()
+    return _rank_rounds(
+        e, flagged, src_flag.agg(F.count("*").alias("n_src")), n_iter, scale
     )
-    for _ in range(n_iter):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select("dst", F.expr("rank DIV od").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            flagged.join(
-                contrib.withColumnRenamed("dst", "node"), "node", "left"
-            )
-            .crossJoin(F.broadcast(n_src))
-            .select(
-                "node",
-                (
-                    F.expr(
-                        f"CASE WHEN is_src = 1 THEN"
-                        f" CAST(3 * {scale} AS BIGINT) DIV (20 * n_src)"
-                        " ELSE CAST(0 AS BIGINT) END"
-                    )
-                    + F.expr(
-                        "17 * (coalesce(in_sum, CAST(0 AS BIGINT)) DIV 20)"
-                        " + (17 * (coalesce(in_sum, CAST(0 AS BIGINT)) % 20)) DIV 20"
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpointCut()
-        )
-    return ranks
 
 
 def _oriented_triangles(canon: DataFrame) -> DataFrame:
@@ -410,7 +385,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     Plan shape per round: ONE shuffle — the (node, label) frequency
     groupBy; the argmax is a second agg on the same keys' prefix (no
     window, no sort), and the neighbor join ships only the node-scale
-    label table.  localCheckpoint per round truncates lineage."""
+    label table.  The n_iter rounds run on ckpt.fixpoint."""
     canon = (
         edges.select(
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
@@ -426,10 +401,8 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         )
         .localCheckpointCut()
     )
-    labels = adj.select("node").distinct().select(
-        "node", F.col("node").alias("label")
-    ).localCheckpointCut()
-    for _ in range(n_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         cnt = (
             adj.join(labels.withColumnRenamed("node", "nbr"), "nbr")
             .groupBy("node", "label")
@@ -437,7 +410,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         )
         # argmax(c) with min-label tie-break == min over (-c, label):
         # struct ordering is lexicographic on fields, no window needed
-        labels = (
+        return (
             cnt.groupBy("node")
             .agg(
                 F.min(
@@ -445,9 +418,12 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
                 ).alias("s")
             )
             .select("node", F.col("s.label").alias("label"))
-            .localCheckpointCut()
         )
-    return labels
+
+    labels = adj.select("node").distinct().select(
+        "node", F.col("node").alias("label"))
+    return fixpoint(labels, step, F.lit(True), "label_propagation",
+                    max_rounds=n_iter, truncate=True)
 
 
 def _frontier_bfs(
@@ -720,21 +696,26 @@ def hits(
     mx < 1e9, i.e. until max degree exceeds ~1000, and beyond that the
     relative truncation error is < 1e-9 per round.
 
-    Plan: 2 shuffles per round (the two contribution groupBys); the
-    normalizing max and the node list are broadcast; localCheckpoint
-    per round truncates lineage."""
+    Plan: one ckpt.fixpoint round per half-iteration over state [node,
+    hub, auth] — 2 * n_iter rounds, each one contribution groupBy plus
+    the normalizing max, which rides a broadcast."""
     if n_iter < 1:
         raise ValueError("hits needs n_iter >= 1")
-    e = edges.select("src", "dst").distinct().localCheckpointCut()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpointCut()
-    )
-    hub = nodes.select("node", F.lit(scale).cast("bigint").alias("hub"))
+    e, nodes = _distinct_edges_and_nodes(edges)
+    halves = itertools.count()
 
-    def _norm(raw: DataFrame, col: str) -> DataFrame:
+    def step(s: DataFrame) -> DataFrame:
+        # even rounds refresh auth from hub along in-edges, odd rounds
+        # hub from auth along out-edges; the other score rides along
+        if next(halves) % 2 == 0:
+            col, frm, key, out = "auth", "hub", "src", "dst"
+        else:
+            col, frm, key, out = "hub", "auth", "dst", "src"
+        raw = (
+            e.join(s.select(F.col("node").alias(key), frm), key)
+            .groupBy(F.col(out).alias("node"))
+            .agg(F.sum(frm).alias(col))
+        )
         mx = raw.agg(
             F.max(col).alias("_mx")
         ).select(
@@ -745,34 +726,25 @@ def hits(
             ).alias("_shift"),
         )
         return (
-            nodes.join(raw, "node", "left")
+            s.drop(col).join(raw, "node", "left")
             .crossJoin(F.broadcast(mx))
             .select(
-                "node",
+                "node", frm,
                 F.expr(
                     f"(coalesce({col}, CAST(0 AS BIGINT)) DIV _shift)"
                     f" * {scale} DIV greatest(_mx DIV _shift,"
                     " CAST(1 AS BIGINT))"
                 ).alias(col),
             )
-            .localCheckpointCut()
         )
 
-    auth = None
-    for _ in range(n_iter):
-        auth = _norm(
-            e.join(hub.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("auth")),
-            "auth",
-        )
-        hub = _norm(
-            e.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("hub")),
-            "hub",
-        )
-    return nodes.join(hub, "node").join(auth, "node")
+    init = nodes.select(
+        "node", F.lit(scale).cast("bigint").alias("hub"),
+        F.lit(0).cast("bigint").alias("auth"),
+    )
+    out = fixpoint(init, step, F.lit(True), "hits",
+                   max_rounds=2 * n_iter, truncate=True)
+    return out.select("node", "hub", "auth")
 
 
 def deterministic_walks(
@@ -903,6 +875,8 @@ def anf_reach(
     closure (quadratic rows); ANF needs one 8-byte mask per (node, salt)
     and ONE join + bit_or aggregation per round, so measuring "how much
     of the graph is within k hops" costs k scans of the edge list.
+    The rounds run on ckpt.fixpoint; each round's checkpointed state
+    yields the snapshot for its k.
 
     Mask algebra (all native integer ops, deterministic, replayed
     verbatim by the q_anf oracle):
@@ -917,13 +891,7 @@ def anf_reach(
     of b over the salts (the exact, hashable quantity the oracle
     checks), `est` the double FM estimate derived from it."""
     mcols = [f"m{s}" for s in range(n_hashes)]
-    e = edges.select("src", "dst").distinct().localCheckpointCut()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    masks = nodes
+    e, masks = _distinct_edges_and_nodes(edges)
     for s, mc in enumerate(mcols):
         h = _hash_u32(F.concat_ws(":", F.lit(f"anf{s}"), F.col("node")))
         lowbit = h.bitwiseAND(-h)
@@ -933,7 +901,6 @@ def anf_reach(
         masks = masks.withColumn(
             mc, F.pow(F.lit(2.0), rho.cast("double")).cast("long")
         )
-    masks = masks.localCheckpointCut()
 
     def snapshot(m: DataFrame, k: int) -> DataFrame:
         b_exprs = []
@@ -949,20 +916,23 @@ def anf_reach(
              / F.lit(0.77351)).alias("est"),
         )
 
-    out = snapshot(masks, 0)
-    cur = masks
-    for k in range(1, rounds + 1):
+    states: list[DataFrame] = []
+
+    def spread(cur: DataFrame) -> DataFrame:
+        states.append(cur)
         contrib = e.join(cur, e["dst"] == cur["node"]).select(
             F.col("src").alias("node"), *mcols
         )
-        cur = (
+        return (
             cur.unionByName(contrib)
             .groupBy("node")
             .agg(*[F.bit_or(mc).alias(mc) for mc in mcols])
-            .localCheckpointCut()
         )
-        out = out.unionByName(snapshot(cur, k))
-    return out
+
+    last = fixpoint(masks, spread, F.lit(True), "anf_reach",
+                    max_rounds=rounds, truncate=True)
+    return reduce(DataFrame.unionByName,
+                  [snapshot(m, k) for k, m in enumerate(states + [last])])
 
 
 def _hash_u32(col) -> "F.Column":

@@ -214,10 +214,6 @@ def filter_to_pending(
     )
 
 
-def write_triples(io: TableIO, triples: DataFrame) -> None:
-    io.write(triples, TRIPLES, mode="overwrite")
-
-
 def mark_done(
     spark: SparkSession,
     io: TableIO,

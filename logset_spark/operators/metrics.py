@@ -2,8 +2,7 @@
 
 P/R against golden triples (the reference's emitted Turtle, SURVEY §5.1)
 is set arithmetic: TP = emitted ∩ golden, computed as an inner join on
-(subj, pred, obj) — never a collect.  Rollup metrics use grouping sets so
-one shuffle serves per-pred, per-day, and total counts.
+(subj, pred, obj) — never a collect.
 """
 
 from __future__ import annotations
@@ -41,17 +40,3 @@ def precision_recall(emitted: DataFrame, golden: DataFrame) -> dict[str, float]:
         "precision": tp / n_e if n_e else 1.0,
         "recall": tp / n_g if n_g else 1.0,
     }
-
-
-def graph_stats(triples: DataFrame) -> DataFrame:
-    """Per-predicate / per-day / total counts in ONE pass via rollup."""
-    return (
-        triples.withColumn("ts_day", F.to_date("ts"))
-        .rollup("pred", "ts_day")
-        .agg(
-            F.count("*").alias("n_triples"),
-            F.approx_count_distinct("subj").alias("approx_subjects"),
-            F.approx_count_distinct("obj").alias("approx_objects"),
-        )
-        .withColumn("level", F.grouping_id("pred", "ts_day"))
-    )

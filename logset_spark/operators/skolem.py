@@ -23,7 +23,8 @@ groupBy per node with collect_list -> array_sort -> md5 — all
 JVM-side, linear in |E| per round, k rounds total (k=2 covers the
 nesting depth real catalog bnodes have; deeper structures just need a
 bigger k, it never needs to reach graph diameter because only
-bnode-to-bnode chains propagate ambiguity).
+bnode-to-bnode chains propagate ambiguity).  The rounds run on
+ckpt.fixpoint, one origin-cut checkpoint each.
 
 Fixed rounds are SEMANTICS here (the k-hop guarantee), so the oracle
 (q_skolem) unrolls the same k rounds in SQL — same signature strings,
@@ -52,6 +53,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..ckpt import fixpoint
 
 SKOLEM_NS = "sk:"
 
@@ -114,7 +117,8 @@ def wl_colors(
         "pred", F.col("subj").alias("peer"),
     )
     half = out_half.unionByName(in_half)
-    for _ in range(rounds):
+
+    def refine(colors: DataFrame) -> DataFrame:
         peer_colors = colors.select(
             F.col("node").alias("peer"), F.col("color").alias("peer_color")
         )
@@ -132,20 +136,18 @@ def wl_colors(
             )
         )
         # isolated nodes (no edges) keep their previous color
-        colors = (
-            colors.join(sigs, "node", "left")
-            .select(
-                "node",
-                F.when(
-                    refinable & F.col("sig_color").isNotNull(),
-                    F.col("sig_color"),
-                )
-                .otherwise(F.col("color"))
-                .alias("color"),
+        return colors.join(sigs, "node", "left").select(
+            "node",
+            F.when(
+                refinable & F.col("sig_color").isNotNull(),
+                F.col("sig_color"),
             )
-            .localCheckpoint(eager=True)
+            .otherwise(F.col("color"))
+            .alias("color"),
         )
-    return colors
+
+    return fixpoint(colors, refine, F.lit(True), "wl_colors",
+                    max_rounds=rounds, truncate=True)
 
 
 def skolemize(

@@ -53,11 +53,6 @@ def _stage_name(run_id: str) -> str:
     checkpoint.  The dir is removed on successful completion."""
     return f"{STAGE_TRIPLES}/run={run_id}"
 
-_TRIPLE_SCHEMA = (
-    "subj string, pred string, obj string, conv_id string, "
-    "turn_idx int, ts timestamp, conf double"
-)
-
 
 def _write_stage1(io: TableIO, run_id: str, df: DataFrame) -> None:
     """Mapper-direct bucket-partitioned write: each scan task writes its
@@ -626,9 +621,6 @@ def build_graph(
     io: TableIO,
     run_id: str | None = None,
     fuzzy_threshold: float = 0.55,
-    with_lineage: bool = True,
-    fuzzy: bool = True,
-    canonicalize: bool = True,
     timings: dict | None = None,
     gc_stale_checkpoints: bool = False,
     disambiguate: bool = False,
@@ -642,9 +634,8 @@ def build_graph(
     Idempotent per (run_id, partition): stage 1 skips conv_buckets its
     manifest marks done, the final write skips (ts_day, conv_bucket)
     partitions marked done, and both writes are dynamic partition
-    overwrites so re-runs replace rather than duplicate.  `fuzzy` /
-    `canonicalize` toggle stages 2/3 (profiling + degraded modes);
-    `timings` (optional dict) collects per-stage wall seconds.
+    overwrites so re-runs replace rather than duplicate.  `timings`
+    (optional dict) collects per-stage wall seconds.
 
     A COMPLETED run removes its own stage-1 checkpoint; a crashed or
     abandoned run_id intentionally keeps its (dataset-sized) checkpoint
@@ -757,20 +748,14 @@ def build_graph(
     _mark("extract_link")
 
     # Stage 2: fuzzy linking over distinct unlinked forms (tiny domain)
-    if fuzzy:
-        links = _fuzzy_links(spark, io, run_id, dictionary, fuzzy_threshold,
-                             temporal=temporal_dictionary)
-    else:
-        links = spark.createDataFrame([], "form string, canon_uri string, score double")
+    links = _fuzzy_links(spark, io, run_id, dictionary, fuzzy_threshold,
+                         temporal=temporal_dictionary)
     links = links.persist()  # tiny: distinct fuzzy forms only
     links.count()
     _mark("fuzzy")
 
     # Stage 3: canonicalize over the alias graph (tiny domain)
-    if canonicalize:
-        same_as = _same_as_triples(spark, links, dictionary)
-    else:
-        same_as = spark.createDataFrame([], _TRIPLE_SCHEMA)
+    same_as = _same_as_triples(spark, links, dictionary)
     _mark("canonicalize")
 
     # Stage 3.5 (opt-in): anaphora resolution -> refersTo packed rows,
@@ -817,11 +802,10 @@ def build_graph(
     rows_out = sum(c[2] for c in counts)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
-    if with_lineage:
-        materialize.append_lineage(
-            spark, io, run_id, "build_graph", rows_in, rows_out, wall_ms
-        )
-        materialize.append_partition_lineage(io, run_id, "materialize", counts)
+    materialize.append_lineage(
+        spark, io, run_id, "build_graph", rows_in, rows_out, wall_ms
+    )
+    materialize.append_partition_lineage(io, run_id, "materialize", counts)
     # Successful completion: the run-scoped stage-1 checkpoint is dead
     # weight now (resume consults the manifest and skips before reading
     # it) — drop it so stale buckets can never leak into a later run.

@@ -45,12 +45,6 @@ HOT_SURFACE = "mainframe"       # deliberately hot dictionary key (skew fixture)
 HOT_URI = "ent:hot/mainframe"
 
 
-def tool_vocab_pdf() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"tool_name": TOOLS, "tool_uri": [f"tool:{t}" for t in TOOLS]}
-    )
-
-
 def _base_names(n: int, rng: np.random.Generator) -> np.ndarray:
     a = rng.choice(_WORDS, size=n)
     b = rng.choice(_WORDS, size=n)

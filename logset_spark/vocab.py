@@ -60,14 +60,6 @@ def pred_from_code(code) -> Column:
     c = F.col(code) if isinstance(code, str) else code
     return F.element_at(F.array(*[F.lit(p) for p in _CODE_TO_PRED]), c.cast("int"))
 
-
-def subj_from_code(code, conv_id="conv_id", turn_idx="turn_idx") -> Column:
-    """Reconstruct the subject URI of a slim stage-1 row."""
-    c = F.col(code) if isinstance(code, str) else code
-    return F.when(c == PRED_CODES[HAS_TURN], conv_uri(conv_id)).otherwise(
-        turn_uri(conv_id, turn_idx)
-    )
-
 # Triple-table schema (§1.2): provenance columns ride along for partition
 # pruning + lineage; conf carries the linking score.
 TRIPLE_COLS = ("subj", "pred", "obj", "conv_id", "turn_idx", "ts", "conf")

@@ -1089,3 +1089,32 @@ def test_modularity_matches_python_and_prefers_true_partition(spark):
     assert q_good > modularity_score(df, allone)
     # and the trivial all-in-one partition has Q == 0 exactly
     assert modularity_score(df, allone) == 0.0
+
+
+def test_fixed_round_operators_at_zero_rounds(spark):
+    """Zero rounds return each recurrence's initial state: uniform
+    PageRank, teleport-only PPR (|S| counts a source absent from the
+    graph), identity LPA labels and only the k = 0 ANF snapshot."""
+    from logset_spark.operators.graph import anf_reach, label_propagation
+
+    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    nodes = {"a", "b", "c", "d"}
+
+    ranks = {r["node"]: r["rank"]
+             for r in pagerank_fixedpoint(df, n_iter=0).collect()}
+    assert ranks == {v: PR_SCALE // 4 for v in nodes}
+
+    srcs = spark.createDataFrame([("a",), ("zz",)], "node string")
+    ppr = {r["node"]: r["rank"]
+           for r in ppr_fixedpoint(df, srcs, n_iter=0).collect()}
+    assert ppr == {"a": PR_SCALE // 2, "b": 0, "c": 0, "d": 0}
+
+    und = df.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    labels = {r["node"]: r["label"]
+              for r in label_propagation(und, n_iter=0).collect()}
+    assert labels == {v: v for v in nodes}
+
+    anf = anf_reach(df, rounds=0).collect()
+    assert {r["k"] for r in anf} == {0}
+    assert {r["node"] for r in anf} == nodes
