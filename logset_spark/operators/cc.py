@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ckpt import fixpoint  # also registers df.localCheckpointCut
+from ..session import local_frame
 
 
 def _bidirect(edges: DataFrame) -> DataFrame:
@@ -48,7 +49,9 @@ def _driver_side_cc(edges: DataFrame) -> DataFrame:
     DataFrame loop below costs ~0.5s of scheduling latency per round no
     matter how small the data is; below SMALL_GRAPH_EDGES the whole edge
     list fits in driver memory trivially and a collect + union-find is
-    both faster and exactly equivalent (same min-label semantics)."""
+    both faster and exactly equivalent (same min-label semantics).  The
+    result is an Arrow-built LocalRelation (session.local_frame): no
+    Python worker."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -67,9 +70,7 @@ def _driver_side_cc(edges: DataFrame) -> DataFrame:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)  # min label wins
     out = [(n, find(n)) for n in parent]
-    return edges.sparkSession.createDataFrame(
-        out, "node string, component string"
-    )
+    return local_frame(edges.sparkSession, out, "node string, component string")
 
 
 def connected_components(
@@ -88,7 +89,7 @@ def connected_components(
     where the iterative loop's per-round cost is actually amortized."""
     # checkpoint the INPUT first: union/bidirect below scans it multiple
     # times within one action, which would re-run the whole upstream plan
-    # (extraction UDFs, fuzzy linking) once per branch.
+    # (extraction, fuzzy linking) once per branch.
     edges = edges.localCheckpointCut()
     limit = SMALL_GRAPH_EDGES if small_graph_edges is None else small_graph_edges
     if edges.limit(limit + 1).count() <= limit:

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .link import band_signatures, jaccard
+from .link import band_signatures, jaccard, word_shingles
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -149,8 +149,8 @@ def minhash_pairs(
     make the candidate set << corpus).
 
     banded is locally checkpointed before the self-join — the branches
-    alias differently, so the minhash UDF would otherwise run twice over
-    the full corpus."""
+    alias differently, so the MinHash expression would otherwise run
+    twice over the full corpus."""
     slim = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
     banded = band_signatures(slim, "txt", num_hashes, bands, unit="word").select(
         "id", "band", "band_hash"
@@ -167,32 +167,18 @@ def minhash_pairs(
         .distinct()
     )
 
-    def shingles(c):
-        # \s+ split + empty filter mirrors the python str.split() the
-        # MinHash stage tokenizes with — a plain split(' ') keeps empty
-        # tokens on doubled spaces and never splits tabs/newlines, so the
-        # verify jaccard would disagree with the candidate stage (two docs
-        # differing only by a double space scored 0.625, not 1.0)
-        toks = F.filter(F.split(F.lower(c), r"\s+"), lambda t: t != "")
-        return F.when(F.size(toks) == 0, F.array().cast("array<string>")).otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.greatest(F.size(toks) - 3, F.lit(0))),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-                )
-            )
-        )
-
     # shingle sets ONLY for candidate docs: semi-join scopes the second
-    # corpus pass to ids that survived blocking (shingles are native
-    # exprs, fused into the scan — no checkpoint, no double-UDF hazard)
+    # corpus pass to ids that survived blocking.  word_shingles is the
+    # MinHash stage's own unit expression, so verify and blocking agree
+    # on every tokenization (Python str.split() separators, Unicode
+    # included).
     cand_ids = (
         cand.select(F.col("doc_a").alias("id"))
         .union(cand.select(F.col("doc_b").alias("id")))
         .distinct()
     )
     sh = slim.join(cand_ids, "id", "left_semi").select(
-        "id", shingles(F.col("txt")).alias("sh")
+        "id", word_shingles(F.col("txt")).alias("sh")
     )
     return (
         cand.join(

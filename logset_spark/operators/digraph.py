@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ckpt import fixpoint  # also registers df.localCheckpointCut
+from ..session import local_frame
 from .cc import SMALL_GRAPH_EDGES
 
 
@@ -125,8 +126,8 @@ def _driver_side_scc(edges: DataFrame) -> DataFrame:
             if work:
                 parent = work[-1][0]
                 low[parent] = min(low[parent], low[v])
-    return edges.sparkSession.createDataFrame(
-        sorted(comp.items()), "node string, scc string"
+    return local_frame(
+        edges.sparkSession, sorted(comp.items()), "node string, scc string"
     )
 
 
@@ -345,10 +346,9 @@ def topo_levels(
     )
     if edges.limit(limit + 1).count() <= limit:
         rows = [(r[0], r[1]) for r in edges.collect()]
-        out = _driver_side_topo(rows, on_cycle)
-        return edges.sparkSession.createDataFrame(
-            out, "node string, level int"
-        )
+        return local_frame(edges.sparkSession,
+                           _driver_side_topo(rows, on_cycle),
+                           "node string, level int")
 
     # self-loops stay in: a self-loop node blocks itself forever
     e = edges.select("src", "dst").distinct().localCheckpointCut()

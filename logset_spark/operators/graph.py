@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..ckpt import fixpoint  # also registers df.localCheckpointCut
+from ..session import local_frame
 from .cc import SMALL_GRAPH_EDGES
 
 # rank unit: 1.0 == 10^12.  Headroom: total rank MASS is conserved-or-
@@ -86,9 +87,7 @@ def _closure_small(spark, rows: list, max_pairs: int) -> DataFrame | None:
                 g for a in frontier for g in parents.get(a, ()) if g not in seen
             }
             dist += 1
-    return spark.createDataFrame(
-        out, "node string, ancestor string, dist int"
-    )
+    return local_frame(spark, out, "node string, ancestor string, dist int")
 
 
 def transitive_closure(

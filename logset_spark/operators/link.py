@@ -11,20 +11,19 @@ Reference behavior: a Python dict lookup inside per-file loops
   broadcast dim the salt is unnecessary, but the same mention stream also
   feeds shuffle joins downstream, and AQE skew-join only fixes *shuffle*
   skew, so both knobs exist (BASELINE.json: "AQE + key salting").
-* fuzzy: char-3-gram MinHash signatures (numpy matrix math inside a pandas
-  UDF), banded LSH -> candidate pairs via an equi-join on (band, band_hash)
-  -- only intra-bucket pairs are ever compared -- then exact n-gram Jaccard
-  verify with native higher-order array functions, best match per form by
-  window.
+* fuzzy: char-3-gram MinHash signatures, one native expression per row
+  (crc32 per gram, wrapping splitmix64 per seed on bigint limbs — no
+  Python worker), banded LSH -> candidate pairs via an equi-join on (band,
+  band_hash) -- only intra-bucket pairs are ever compared -- then exact
+  n-gram Jaccard verify with native higher-order array functions, best
+  match per form by window.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # exact linking
@@ -197,9 +196,18 @@ def salted_join(
 
 NGRAM = 3
 
-_SPLITMIX_C = np.uint64(0x9E3779B97F4A7C15)
-_SPLITMIX_M1 = np.uint64(0xBF58476D1CE4E5B9)
-_SPLITMIX_M2 = np.uint64(0x94D049BB133111EB)
+# Python's str.split() separators (exactly the code points with
+# str.isspace()); Java's \s is ASCII-only, so a `\s+` split would keep
+# "alpha\u00a0beta" as one token where Python yields two.
+WHITESPACE_CLASS = (
+    r"[\t-\r\x1c-\x20\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f"
+    r"\u205f\u3000]"
+)
+
+_SPLITMIX_C = 0x9E3779B97F4A7C15
+_SPLITMIX_M1 = 0xBF58476D1CE4E5B9
+_SPLITMIX_M2 = 0x94D049BB133111EB
+_M32 = 0xFFFFFFFF
 
 
 def _minhash_seeds(num_hashes: int, seed: int = 7) -> np.ndarray:
@@ -207,98 +215,111 @@ def _minhash_seeds(num_hashes: int, seed: int = 7) -> np.ndarray:
     permutation family (a*x+b mod p) is only 2-universal, NOT min-wise
     independent — on the small gram sets of short surface forms it biases
     the Jaccard estimate badly (observed 0.15 vs true 0.43), so each slot
-    gets its own strongly-mixed hash instead (see _splitmix below);
-    collision probability is then ~J per slot, the unbiased estimator."""
+    gets its own strongly-mixed hash instead (splitmix64, see
+    _splitmix_sql); collision probability is then ~J per slot, the
+    unbiased estimator."""
     rng = np.random.default_rng(seed)
     return rng.integers(0, 1 << 63, size=num_hashes, dtype=np.uint64)
 
 
-def _splitmix(x: np.ndarray) -> np.ndarray:
-    """splitmix64 finalizer — full-avalanche 64-bit mixer, pure uint64
-    wraparound math: deterministic across numpy versions and platforms
-    (SURVEY §7 hard-part 3)."""
-    x = x + _SPLITMIX_C
-    x ^= x >> np.uint64(30)
-    x *= _SPLITMIX_M1
-    x ^= x >> np.uint64(27)
-    x *= _SPLITMIX_M2
-    x ^= x >> np.uint64(31)
-    return x
+def _bind(value: str, var: str, body: str) -> str:
+    """SQL `let var = value in body`: the value is evaluated once per row
+    however often body names it.  Without it each splitmix step repeats
+    its whole input tree (hundreds of copies by the last step).  Spelled
+    as an aggregate over an empty array, whose finish lambda runs once on
+    the start value: unlike element_at(transform(array(value), ...), 1)
+    it allocates no arrays (~25% less time on 20k forms)."""
+    return f"aggregate(array(), {value}, (_acc, _x) -> _acc, {var} -> {body})"
 
 
-def _gram_hashes(txt: str, n: int = NGRAM) -> np.ndarray:
-    """Stable 32-bit hashes of the char-n-gram set (crc32: identical on
-    driver, executors, and across Python runs — unlike builtin hash)."""
-    from zlib import crc32
-
-    s = f"^{txt}$"
-    grams = {s[i: i + n] for i in range(len(s) - n + 1)}
-    return np.fromiter(
-        (crc32(g.encode("utf-8")) for g in grams), dtype=np.int64, count=len(grams)
+def _mul64_sql(x: str, m: int) -> str:
+    """(x * m) mod 2^64 for a bound bigint `x` and a 64-bit constant `m`.
+    ANSI mode raises on bigint overflow, so the product is built from the
+    32-bit halves of x and the 16-bit limbs of m: every partial product
+    and sum stays below 2^50, and only shiftleft (which wraps) and `|`
+    join the two words."""
+    ml0, ml1 = m & 0xFFFF, (m >> 16) & 0xFFFF
+    mh0, mh1 = (m >> 32) & 0xFFFF, m >> 48
+    xh = f"shiftrightunsigned({x}, 32)"
+    # _mo = low 32 bits of x times m plus a carry above them (< 2^49)
+    low = f"_ml * {ml0} + shiftleft((_ml * {ml1}) & 65535, 16)"
+    high = (  # the high word, plus harmless bits above 2^32
+        f"shiftrightunsigned(_mo, 32) + shiftrightunsigned(_ml * {ml1}, 16)"
+        f" + {xh} * {ml0} + shiftleft(({xh} * {ml1}) & 65535, 16)"
+        f" + _ml * {mh0} + shiftleft((_ml * {mh1}) & 65535, 16)"
     )
+    return _bind(f"{x} & {_M32}", "_ml", _bind(
+        low, "_mo", f"shiftleft({high}, 32) | (_mo & {_M32})"))
 
 
-def _shingle_hashes(txt: str, n: int = 3) -> np.ndarray:
-    """Word-n-shingle hashes: the dedup unit for *documents* (char grams
-    are for short surface forms — on full docs over a small vocabulary
-    they saturate and every pair looks similar)."""
-    from zlib import crc32
+def _splitmix_sql(v: str) -> str:
+    """splitmix64 finalizer of a NON-NEGATIVE bigint expression `v`, as
+    wrapping 64-bit math: full avalanche, identical to the uint64 numpy
+    version bit for bit.  v + C cannot overflow: v >= 0 and C, read as a
+    signed bigint, is negative."""
+    c = _SPLITMIX_C - (1 << 64)
+    return _bind(
+        f"(({v}) + {c}L) ^ shiftrightunsigned(({v}) + {c}L, 30)", "_mh_b",
+        _bind(_mul64_sql("_mh_b", _SPLITMIX_M1), "_mh_c",
+              _bind("_mh_c ^ shiftrightunsigned(_mh_c, 27)", "_mh_d",
+                    _bind(_mul64_sql("_mh_d", _SPLITMIX_M2), "_mh_e",
+                          "_mh_e ^ shiftrightunsigned(_mh_e, 31)"))))
 
-    toks = txt.lower().split()
-    if len(toks) < n:
-        sh = {" ".join(toks)} if toks else set()
-    else:
-        sh = {" ".join(toks[i: i + n]) for i in range(len(toks) - n + 1)}
-    return np.fromiter(
-        (crc32(s.encode("utf-8")) for s in sh), dtype=np.int64, count=len(sh)
+
+def word_shingles(col, n: int = 3):
+    """Distinct word-n-shingles of lower(text), split like Python's
+    str.split(): the dedup unit for *documents* (char grams are for short
+    surface forms — on full docs over a small vocabulary they saturate and
+    every pair looks similar).  Fewer than n tokens -> one shingle of all
+    of them; no tokens -> empty array; null text -> null.  The MinHash
+    stage and the near-dup verify both use this one expression."""
+    toks = F.filter(
+        F.split(F.lower(col), WHITESPACE_CLASS + "+"), lambda t: t != ""
     )
+    return F.transform(F.array(toks), lambda ts: F.when(
+        F.size(ts) > 0, F.array_distinct(F.transform(
+            F.sequence(F.lit(0), F.greatest(F.size(ts) - n, F.lit(0))),
+            lambda i: F.concat_ws(" ", F.slice(ts, i + 1, n)),
+        ))
+    ).when(ts.isNotNull(), F.array().cast("array<string>")))[0]
 
 
-def _signature(gram_hashes: np.ndarray, seeds: np.ndarray) -> np.ndarray:
-    """sig_j = min_x splitmix64(x ^ seed_j); returned as int64 view for
-    Spark LongType."""
-    with np.errstate(over="ignore"):
-        mixed = _splitmix(gram_hashes.astype(np.uint64)[None, :] ^ seeds[:, None])
-    return mixed.min(axis=1).view(np.int64)
+def _has_units(col, unit: str):
+    """Cheap exact test for "text has at least one MinHash unit": any
+    char for char grams, any non-separator char for word shingles."""
+    if unit == "char":
+        return F.length(col) > 0
+    return col.rlike("[^" + WHITESPACE_CLASS[1:])
 
 
-def make_minhash_udf(num_hashes: int = 32, seed: int = 7, unit: str = "char"):
-    """pandas UDF: Series[str] -> Series[list[long]] — k independent-hash
-    MinHash.  unit='char' (3-grams; short surface forms) or 'word'
-    (3-shingles; documents)."""
-    seeds = _minhash_seeds(num_hashes, seed)
-    grams = _gram_hashes if unit == "char" else _shingle_hashes
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash(texts: pd.Series) -> pd.Series:
-        out = []
-        for txt in texts:
-            # None, not a sentinel signature: an all-zero signature would
-            # put EVERY empty/gram-less string in the same bucket of every
-            # band — O(n_empty^2) candidate pairs that all verify to 0.0.
-            # band_signatures drops null signatures, so empties are simply
-            # never candidates (their true similarity to anything is 0).
-            if not txt:
-                out.append(None)
-                continue
-            hv = grams(txt)
-            if hv.size == 0:
-                out.append(None)
-                continue
-            out.append(_signature(hv, seeds).tolist())
-        return pd.Series(out)
-
-    # asNondeterministic is a pushdown FENCE, not a semantics statement
-    # (the signature is fully deterministic): band_signatures filters on
-    # `_sig IS NOT NULL`, and Catalyst pushes a deterministic filter —
-    # UDF INCLUDED — through joins and aggregates toward the scan.
-    # Measured on the KG pipeline: the null-check landed BELOW the
-    # distinct-forms aggregate, running MinHash once per mention
-    # OCCURRENCE (20.9M rows) instead of once per distinct form (100) —
-    # a 12x fuzzy-stage regression.  Nondeterministic expressions are
-    # never pushed, so the UDF stays exactly where the operator put it:
-    # above the dedup, evaluated once per distinct input.
-    return minhash.asNondeterministic()
+def with_minhash(
+    df: DataFrame, text_col: str, num_hashes: int = 32, seed: int = 7,
+    unit: str = "char", out: str = "_sig",
+) -> DataFrame:
+    """Attach the k-slot MinHash signature of `text_col` as array<bigint>
+    `out`, computed natively: units are char_ngrams (unit='char') or
+    word_shingles (unit='word'), each hashed with crc32 of its UTF-8 bytes
+    (== zlib.crc32, stable everywhere, unlike Python's hash), and slot j
+    is min over units of splitmix64(h ^ seed_j) taken as UNSIGNED 64-bit
+    ints (the sign bit is flipped around array_min) — returned as the
+    same bits read signed.  Null when the text has no units."""
+    units = char_ngrams(F.col(text_col)) if unit == "char" else word_shingles(
+        F.col(text_col))
+    seeds = ", ".join(f"{int(s)}L" for s in _minhash_seeds(num_hashes, seed))
+    sign = "-9223372036854775808L"
+    sig = _bind(
+        "_mh_units", "_mh_hs",
+        f"IF(size(_mh_hs) > 0, transform(array({seeds}), _mh_s -> "
+        f"array_min(transform(_mh_hs, _mh_h -> "
+        f"{_splitmix_sql('_mh_h ^ _mh_s')} ^ {sign})) ^ {sign}), NULL)",
+    )
+    return (
+        df.withColumn(
+            "_mh_units", F.transform(units, lambda u: F.crc32(u.cast("binary")))
+        )
+        .withColumn(out, F.expr(sig))
+        .drop("_mh_units")
+    )
 
 
 def band_signatures(
@@ -307,13 +328,21 @@ def band_signatures(
 ) -> DataFrame:
     """Attach MinHash and explode into (band, band_hash) LSH keys.
     rows-per-band r = num_hashes // bands; two strings collide in a band
-    iff all r signature slots match, so band_hash = xxhash64 of the slice."""
+    iff all r signature slots match, so band_hash = xxhash64 of the slice.
+
+    Text without units (null, empty, or whitespace-only for 'word') is
+    dropped: a sentinel signature would put every such row in the same
+    bucket of every band — O(n_empty^2) candidate pairs that all verify
+    to 0.0.  The drop filters on a cheap equivalent of "has units", not
+    on the signature: Catalyst pushes a deterministic filter through
+    joins and aggregates toward the scan, and a `_sig IS NOT NULL`
+    filter would land below the caller's distinct, hashing once per
+    mention OCCURRENCE (20.9M rows) instead of once per distinct form."""
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    mh = make_minhash_udf(num_hashes, seed, unit)
-    # null signature = empty/gram-less text -> not bandable (see the UDF)
-    sig = df.withColumn("_sig", mh(F.col(text_col))).where(
-        F.col("_sig").isNotNull()
+    sig = with_minhash(
+        df.where(_has_units(F.col(text_col), unit)), text_col, num_hashes,
+        seed, unit,
     )
     banded = sig.select(
         *df.columns,
@@ -330,8 +359,9 @@ def band_signatures(
 
 
 def char_ngrams(col, n: int = NGRAM):
-    """Native char-n-gram array (distinct) of '^text$' — used for the exact
-    Jaccard verify so no Python runs on the candidate pairs."""
+    """Native char-n-gram array (distinct) of '^text$' — the MinHash unit
+    for short surface forms and the exact Jaccard verify's set, so no
+    Python runs on the forms or the candidate pairs."""
     padded = F.concat(F.lit("^"), col, F.lit("$"))
     idx = F.sequence(F.lit(0), F.greatest(F.length(padded) - n, F.lit(0)))
     return F.array_distinct(
@@ -361,8 +391,10 @@ def fuzzy_link(
     Plan shape: both sides get banded LSH keys; equi-join on
     (band, band_hash) yields only intra-bucket candidates; exact n-gram
     Jaccard (native array ops) verifies; window keeps the best match.
-    Dedup BEFORE hashing: the expensive UDF runs once per distinct form,
-    not once per mention occurrence (SURVEY §4 'dedup before expensive')."""
+    Dedup BEFORE hashing: the MinHash expression runs once per distinct
+    form, not once per mention occurrence (SURVEY §4 'dedup before
+    expensive'; band_signatures keeps its filter cheap so nothing pushes
+    the hashing below the distinct)."""
     forms = unlinked_forms.select("form").distinct()
     dim = best_surface_dictionary(dictionary)
 

@@ -26,6 +26,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.tableio import TableIO, with_layout
 
 MANIFEST = "manifest"
@@ -110,7 +111,7 @@ def completed_partitions(
 ) -> DataFrame:
     m = _manifest_or_none(spark, io)
     if m is None:
-        return spark.createDataFrame([], "ts_day date, conv_bucket int")
+        return local_frame(spark, [], "ts_day date, conv_bucket int")
     return (
         m.where(
             (F.col("run_id") == run_id)

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # At 100 TB / 10^12 turns these become cluster-submit confs; the *ratios*
 # (shuffle partitions ~ total cores x 2-3, Arrow batch ~ 10k rows) are what
@@ -103,3 +103,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side rows -> DataFrame built from a pyarrow Table.
+
+    The JVM decodes the Arrow batches into a LocalRelation, so no Python
+    worker starts.  ``spark.createDataFrame(list)`` pickles the rows
+    through a PythonRDD instead: even an empty list starts the Python
+    daemon, whose workers then stay resident beside the JVM for the rest
+    of the session.  ``schema`` is a DDL string such as
+    ``"node string, level int"``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    ))

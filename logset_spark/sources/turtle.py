@@ -988,17 +988,18 @@ def load_turtle_bulk(spark, path: str):
          fresh-bnode labels salted with the statement id.
 
     Subset (all violations LOUD, never silent): directives must sit in
-    the header (a mid-document directive binds prefixes the other
-    statements' parsers would not see — detected per statement and
-    rejected); literals must not span lines (unbalanced quote check;
-    triple-quoted long literals are outside the tokenizer's grammar
-    anyway); RDF-star annotations use parse_turtle_star."""
+    the header (a mid-document directive binds prefixes or a base the
+    other statements' parsers would not see — a new name, a re-bound
+    name or a moved @base is detected per statement and rejected);
+    literals must not span lines (unbalanced quote check; triple-quoted
+    long literals are outside the tokenizer's grammar anyway); RDF-star
+    annotations use parse_turtle_star."""
     from pyspark.sql import functions as F
 
     header = _read_header_directives(path)
     hp = _Parser(_tokenize(header))
     hp.statements()
-    header_prefixes = set(hp.prefixes)
+    header_prefixes, header_base = dict(hp.prefixes), hp.base
 
     lines = spark.read.text(path).select(
         F.col("value").alias("line"),
@@ -1083,14 +1084,21 @@ def load_turtle_bulk(spark, path: str):
                 raise ValueError(
                     "RDF-star annotations are outside the bulk subset; "
                     "use parse_turtle_star")
-            extra = set(p.prefixes) - header_prefixes
-            if extra:
+            # compare bindings, not names: a body directive that
+            # re-binds a header prefix or moves @base would resolve
+            # this statement differently from the ones after it
+            moved = sorted(
+                k for k in p.prefixes.keys() | header_prefixes.keys()
+                if p.prefixes.get(k) != header_prefixes.get(k))
+            if p.base != header_base:
+                moved.append("@base")
+            if moved:
                 raise ValueError(
-                    f"mid-document @prefix {sorted(extra)} is outside "
+                    f"mid-document @prefix/@base {moved} is outside "
                     "the bulk-Turtle subset (statements parse "
                     "independently, so a body directive would bind "
-                    "prefixes other statements never see) — declare "
-                    "all prefixes in the file header")
+                    "names other statements never see) — declare "
+                    "all prefixes and the base in the file header")
             out.append(trips)
         return pd.Series(out)
 

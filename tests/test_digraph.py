@@ -312,3 +312,42 @@ def test_checkpoint_cut_drops_origin_and_preserves_data(spark):
     out = fixpoint(df.limit(0), lambda s: rounds.append(1) or s,
                    F.col("k") > 0, "empty")
     assert rounds == [1] and out.count() == 0
+
+
+def test_small_graph_results_are_arrow_local_relations(spark):
+    """The driver-side small-graph paths (CC union-find, Tarjan SCC, Kahn
+    topo levels, BFS closure) hand their rows back as an Arrow-built
+    LocalRelation: the list createDataFrame path pickles them through a
+    PythonRDD and starts the Python daemon.  Covers null levels (a cycle
+    and its downstream under on_cycle='mark') and empty results."""
+    from pyspark.sql import functions as F
+
+    from logset_spark.operators.graph import transitive_closure
+
+    def rows(df, schema):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+        assert df.schema.simpleString() == f"struct<{schema}>"
+        return sorted(tuple(r) for r in df.collect())
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("b", "c"), ("e", "f")], "src string, dst string"
+    )
+    none = edges.where(F.lit(False))
+    cc_schema = "node:string,component:string"
+    assert rows(connected_components(edges), cc_schema) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("e", "e"), ("f", "e")]
+    assert rows(connected_components(none), cc_schema) == []
+    scc_schema = "node:string,scc:string"
+    assert rows(scc(edges), scc_schema) == [
+        ("a", "a"), ("b", "a"), ("c", "c"), ("e", "e"), ("f", "f")]
+    assert rows(scc(none), scc_schema) == []
+    topo_schema = "node:string,level:int"
+    assert rows(topo_levels(edges, on_cycle="mark"), topo_schema) == [
+        ("a", None), ("b", None), ("c", None), ("e", 0), ("f", 1)]
+    assert rows(topo_levels(none), topo_schema) == []
+    tc_schema = "node:string,ancestor:string,dist:int"
+    parents = edges.select(F.col("src").alias("child"), F.col("dst").alias("parent"))
+    assert rows(transitive_closure(parents.where("child = 'e'")), tc_schema) == [
+        ("e", "f", 1)]
+    assert rows(transitive_closure(parents.where(F.lit(False))), tc_schema) == []

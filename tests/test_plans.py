@@ -387,18 +387,19 @@ def test_sparql_constant_graph_prunes_partitions(spark, tmp_path):
     assert "PushedFilters: [" in plan
 
 
-def test_minhash_udf_never_pushed_below_dedup(spark, tmp_path):
-    """The MinHash pandas UDF is a pushdown FENCE (asNondeterministic):
-    band_signatures' `_sig IS NOT NULL` filter must stay ABOVE the
-    distinct aggregate.  A deterministic UDF gets pushed through the
-    aggregate to the scan side, evaluating MinHash once per mention
-    OCCURRENCE instead of once per distinct form — measured 12x on the
-    fuzzy stage at 20.9M turns (fuzzy 6.5s -> 78s at 2 cores)."""
-    from logset_spark.operators.link import band_signatures
+def test_minhash_hashed_once_above_dedup(spark, tmp_path):
+    """The native MinHash runs once per DISTINCT form: crc32 (the unit
+    hash, the first step of the signature) appears exactly once in the
+    plan, above the distinct aggregate.  band_signatures filters on a
+    cheap "has units" test instead of `_sig IS NOT NULL`, because Catalyst
+    pushes a deterministic filter through the aggregate to the scan side
+    and would hash once per mention OCCURRENCE — measured 12x on the fuzzy
+    stage at 20.9M turns.  fuzzy_link runs no Python at all."""
+    from logset_spark.operators.link import band_signatures, fuzzy_link
 
     src = str(tmp_path / "forms_src")
     spark.createDataFrame(
-        [("alpha",), ("alpha",), ("beta",), (None,)], "form_key string"
+        [("alpha",), ("alpha",), ("beta",), ("",), (None,)], "form_key string"
     ).write.parquet(src)
     forms = (
         spark.read.parquet(src)
@@ -407,13 +408,20 @@ def test_minhash_udf_never_pushed_below_dedup(spark, tmp_path):
         .distinct()
     )
     fb = band_signatures(forms, "form")
-    plan = _plan(fb)
-    # exactly one python-eval node, sitting above the (post-exchange)
-    # aggregate — a second one below the exchange IS the regression
-    assert plan.count("ArrowEvalPython") == 1, plan
-    body = plan[plan.index("ArrowEvalPython"):]
-    assert "HashAggregate" in body, plan  # aggregate is downstream (below)
-    assert fb.count() == 2 * 8  # 2 distinct forms x 8 bands, nulls dropped
+    lines = _optimized(fb).splitlines()
+    crc = [i for i, ln in enumerate(lines) if "crc32(" in ln]
+    agg = [i for i, ln in enumerate(lines) if "Aggregate [" in ln]
+    assert len(crc) == 1 and "\n".join(lines).count("crc32(") == 1, lines
+    assert agg and crc[0] <= agg[0], lines  # on or above the distinct
+    assert fb.count() == 2 * 8  # 2 distinct forms x 8 bands, '' dropped
+
+    dictionary = spark.createDataFrame(
+        [("ent:alpha", "alpha", "tool", 1.0), ("ent:gamma", "gamma", "tool", 1.0)],
+        "canon_uri string, surface string, kind string, weight double",
+    )
+    links = fuzzy_link(forms, dictionary, threshold=0.3)
+    assert "EvalPython" not in _plan(links)
+    assert ("alpha", "ent:alpha", 1.0) in {tuple(r) for r in links.collect()}
 
 
 def test_coref_stage_single_data_exchange(spark, tmp_path):

@@ -7,6 +7,7 @@ gram hashing) get wider hypothesis coverage since they run in-process.
 """
 
 import re
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -67,6 +68,53 @@ def _exact_jaccard(a: str, b: str, n: int = 3) -> float:
     return len(ga & gb) / len(ga | gb)
 
 
+# Oracle: MinHash in numpy uint64 arithmetic, which wraps natively.
+_SPLITMIX_C = np.uint64(0x9E3779B97F4A7C15)
+_SPLITMIX_M1 = np.uint64(0xBF58476D1CE4E5B9)
+_SPLITMIX_M2 = np.uint64(0x94D049BB133111EB)
+
+
+def _splitmix(x: np.ndarray) -> np.ndarray:
+    x = x + _SPLITMIX_C
+    x ^= x >> np.uint64(30)
+    x *= _SPLITMIX_M1
+    x ^= x >> np.uint64(27)
+    x *= _SPLITMIX_M2
+    x ^= x >> np.uint64(31)
+    return x
+
+
+def _gram_hashes(txt: str, n: int = 3) -> np.ndarray:
+    s = f"^{txt}$"
+    grams = {s[i : i + n] for i in range(len(s) - n + 1)}
+    return np.array([zlib.crc32(g.encode("utf-8")) for g in grams], np.int64)
+
+
+def _shingle_hashes(txt: str, n: int = 3) -> np.ndarray:
+    toks = txt.lower().split()
+    if len(toks) < n:
+        sh = {" ".join(toks)} if toks else set()
+    else:
+        sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    return np.array([zlib.crc32(x.encode("utf-8")) for x in sh], np.int64)
+
+
+def _signature(hashes: np.ndarray, seeds: np.ndarray) -> np.ndarray:
+    """sig_j = unsigned min_x splitmix64(x ^ seed_j), read as int64."""
+    with np.errstate(over="ignore"):
+        mixed = _splitmix(hashes.astype(np.uint64)[None, :] ^ seeds[:, None])
+    return mixed.min(axis=1).view(np.int64)
+
+
+def _oracle_minhash(txt, num_hashes: int, unit: str):
+    if not txt:
+        return None
+    hv = (_gram_hashes if unit == "char" else _shingle_hashes)(txt)
+    if hv.size == 0:
+        return None
+    return _signature(hv, link._minhash_seeds(num_hashes)).tolist()
+
+
 @settings(max_examples=30, deadline=None)
 @given(
     base=st.text(alphabet="abcdefgh_-", min_size=4, max_size=20),
@@ -78,30 +126,46 @@ def test_minhash_estimates_jaccard(base, suffix):
     sigma so the test is deterministic-in-practice."""
     other = base + suffix
     seeds = link._minhash_seeds(128)
-    ha, hb = link._gram_hashes(base), link._gram_hashes(other)
-    est = float(np.mean(link._signature(ha, seeds) == link._signature(hb, seeds)))
+    ha, hb = _gram_hashes(base), _gram_hashes(other)
+    est = float(np.mean(_signature(ha, seeds) == _signature(hb, seeds)))
     exact = _exact_jaccard(base, other)
     assert abs(est - exact) <= 5 * np.sqrt(max(exact * (1 - exact), 0.002) / 128)
 
 
-def test_minhash_udf_matches_driver_math(spark):
-    """The pandas-UDF path must produce bit-identical signatures to the
-    same numpy math run driver-side (determinism across executors is what
-    makes LSH blocking correct)."""
-    texts = ["alpha_bravo", "alpha_bravo", "granite-mesa_0042", ""]
-    df = spark.createDataFrame([(t,) for t in texts], "t string")
-    got = [
-        r["sig"]
-        for r in df.select(link.make_minhash_udf(16)(F.col("t")).alias("sig"))
-        .collect()
-    ]
-    assert got[0] == got[1]
-    seeds = link._minhash_seeds(16)
-    hv = link._gram_hashes("granite-mesa_0042")
-    assert got[2] == link._signature(hv, seeds).tolist()
-    # empty text -> null signature (not bandable), never a sentinel that
-    # collides all empties into one LSH bucket
-    assert got[3] is None
+# Python whitespace Java's \s misses, final/medial sigma, dotted capital
+# I (lower() grows it to two chars), superscript two, a combining mark,
+# an astral letter (4 UTF-8 bytes) and a ligature
+_MINHASH_UNICODE = (
+    "\x1c\x1f\x85\xa0\u1680\u2007\u2028\u3000"
+    "\u03a3\u03c3\u0130\u00b2\u0301\U0001d400\ufb01"
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(texts=st.lists(
+    st.one_of(st.none(), st.text(
+        alphabet="abcxyz AZ_-\t\n" + _MINHASH_UNICODE, max_size=24)),
+    min_size=1, max_size=40,
+))
+@example(texts=[
+    None, "", " ", "\u3000\xa0", "a", "alpha_bravo", "granite-mesa_0042",
+    "alpha\u00a0beta gamma delta", "\u0130STANBUL \u03a3\u03a3 \u03a3",
+    "x\x1cy\x85z w\u2028v", "\U0001d400\u0301 \ufb01 \u00b2",
+])
+def test_native_minhash_matches_numpy_oracle(spark, texts):
+    """with_minhash is bit-identical to the numpy MinHash for both units
+    (char 3-grams of '^text$'; word 3-shingles of lower(text) split like
+    str.split()) and both signature lengths, over non-ASCII text; text
+    without units gets a null signature, never a sentinel that would
+    collide all empties into one LSH bucket."""
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+    cases = [(unit, k) for unit in ("char", "word") for k in (16, 32)]
+    for unit, k in cases:  # one job computes all four signatures
+        df = link.with_minhash(df, "t", k, unit=unit, out=f"{unit}{k}")
+    for r in df.collect():
+        for unit, k in cases:
+            assert r[f"{unit}{k}"] == _oracle_minhash(r["t"], k, unit), (
+                unit, k, r["t"])
 
 
 # ---------------------------------------------------------------------------
@@ -544,6 +608,24 @@ def test_minhash_pairs_whitespace_parity(spark):
     })
     out = minhash_pairs(spark.createDataFrame(pdf), threshold=0.9).collect()
     assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in out] == [(1, 2, 1.0)]
+
+
+def test_minhash_pairs_unicode_whitespace_parity(spark):
+    """No-break and ideographic spaces separate words for str.split() but
+    not for Java's ASCII \\s: these three docs have identical shingle sets,
+    so blocking pairs them and verify must score them 1.0 (a `\\s+`
+    verify split kept "alpha\\u00a0beta" as one token and dropped every
+    pair at threshold 0.5)."""
+    from logset_spark.operators.dedup import minhash_pairs
+
+    pdf = pd.DataFrame({
+        "doc_id": [1, 2, 3],
+        "text": ["alpha\u00a0beta gamma delta", "alpha beta gamma delta",
+                 "alpha\u3000beta gamma delta"],
+    })
+    out = minhash_pairs(spark.createDataFrame(pdf), threshold=0.5).collect()
+    assert sorted((r["doc_a"], r["doc_b"], r["jaccard"]) for r in out) == [
+        (1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0)]
 
 
 def test_minhash_banded_frame_carries_no_text(spark):

@@ -450,3 +450,46 @@ def test_load_turtle_bulk_rejects_are_loud(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="multi-line"):
         load_turtle_bulk(spark, str(ml)).collect()
+
+
+def test_load_turtle_bulk_rejects_rebound_prefix_and_mid_base(spark, tmp_path):
+    """A body directive that RE-BINDS a header prefix (same name, new
+    IRI) or sets @base mid-document must reject too: each statement
+    parses against the header, so load_turtle_bulk would resolve `ex:s2`
+    to http://a.example/s2 where load_turtle gives http://b.example/s2."""
+    import pytest
+
+    from logset_spark.sources.turtle import load_turtle, load_turtle_bulk
+
+    rebound = tmp_path / "rebound.ttl"
+    rebound.write_text(
+        "@prefix ex: <http://a.example/> .\n"
+        "ex:s1 ex:p ex:o .\n"
+        "@prefix ex: <http://b.example/> .\n"
+        "ex:s2 ex:p ex:o .\n"
+    )
+    assert "http://b.example/s2" in {
+        r["subj"] for r in load_turtle(spark, str(rebound)).collect()}
+    with pytest.raises(Exception, match="mid-document"):
+        load_turtle_bulk(spark, str(rebound)).collect()
+
+    based = tmp_path / "based.ttl"
+    based.write_text(
+        "@prefix ex: <http://a.example/> .\n"
+        "<s1> ex:p ex:o .\n"
+        "@base <http://b.example/> .\n"
+        "<s2> ex:p ex:o .\n"
+    )
+    with pytest.raises(Exception, match="mid-document"):
+        load_turtle_bulk(spark, str(based)).collect()
+
+    # re-stating a header binding unchanged is not a re-bind
+    same = tmp_path / "same.ttl"
+    same.write_text(
+        "@prefix ex: <http://a.example/> .\n"
+        "ex:s1 ex:p ex:o .\n"
+        "@prefix ex: <http://a.example/> .\n"
+        "ex:s2 ex:p ex:o .\n"
+    )
+    assert {r["subj"] for r in load_turtle_bulk(spark, str(same)).collect()} == {
+        "http://a.example/s1", "http://a.example/s2"}
