@@ -34,18 +34,7 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
-
-
-def _load_triples(spark, warehouse: str):
-    from logset_spark.sources.tableio import TableIO
-
-    if os.path.isdir(os.path.join(warehouse, "triples", "_meta")):
-        from logset_spark.sources.snapshots import SnapshotTriplesIO
-
-        return SnapshotTriplesIO(root=warehouse).store.read(spark)
-    return TableIO(root=warehouse).read(spark, "triples")
 
 
 def main(argv=None) -> int:
@@ -77,9 +66,10 @@ def main(argv=None) -> int:
     from pyspark.sql import functions as F
 
     from logset_spark.session import get_spark
+    from logset_spark.sources.snapshots import open_warehouse
 
     spark = get_spark("analyze_graph", cpus=args.cpus)
-    triples = _load_triples(spark, args.warehouse)
+    triples = open_warehouse(args.warehouse).read(spark, "triples")
     if args.pred:
         triples = triples.where(F.col("pred").isin(args.pred))
     edges = triples.select(

@@ -62,20 +62,11 @@ def main(argv=None) -> int:
         build_term_dictionary, encode_triples,
     )
     from logset_spark.session import get_spark
-    from logset_spark.sources.tableio import TableIO
+    from logset_spark.sources.snapshots import open_warehouse
 
     spark = get_spark("encode_graph", cpus=args.cpus)
-    # snapshot warehouses keep superseded commits' files on disk (time
-    # travel); a plain recursive parquet read would encode stale +
-    # duplicate triples — route through the snapshot reader, which
-    # resolves the CURRENT mapping (same guard as query_graph)
-    if os.path.isdir(os.path.join(args.warehouse, "triples", "_meta")):
-        from logset_spark.sources.snapshots import SnapshotTriplesIO
-
-        tri = SnapshotTriplesIO(root=args.warehouse).store.read(spark)
-    else:
-        tri = TableIO(args.warehouse).read(spark, "triples")
-    tri = tri.select("subj", "pred", "obj")
+    tri = open_warehouse(args.warehouse).read(spark, "triples").select(
+        "subj", "pred", "obj")
 
     terms_path = f"{args.out}/terms"
     if args.extend and os.path.isdir(terms_path):

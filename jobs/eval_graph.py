@@ -35,10 +35,10 @@ def main(argv=None) -> int:
 
     from logset_spark.operators.metrics import precision_recall
     from logset_spark.session import get_spark
-    from logset_spark.sources.tableio import TableIO
+    from logset_spark.sources.snapshots import open_warehouse
 
     spark = get_spark("eval_graph", cpus=args.cpus)
-    emitted = TableIO(args.warehouse).read(spark, "triples")
+    emitted = open_warehouse(args.warehouse).read(spark, "triples")
     if args.golden.endswith(".ttl"):
         from logset_spark.sources.turtle import from_turtle
 

@@ -51,11 +51,11 @@ def main(argv=None) -> int:
         graph_star_annotations,
     )
     from logset_spark.session import get_spark
-    from logset_spark.sources.tableio import TableIO
+    from logset_spark.sources.snapshots import open_warehouse
     from logset_spark.sources.turtle import save_turtle_star
 
     spark = get_spark("export_star", cpus=args.cpus)
-    graph = TableIO(root=args.warehouse).read(spark, "triples")
+    graph = open_warehouse(args.warehouse).read(spark, "triples")
     if args.min_conf is not None:
         graph = graph.where(
             F.col("conf").isNull() | (F.col("conf") >= args.min_conf))

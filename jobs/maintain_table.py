@@ -83,10 +83,16 @@ def main(argv=None) -> int:
     args = p.parse_args(argv)
 
     from logset_spark.session import get_spark
-    from logset_spark.sources.snapshots import SnapshotTriplesIO
+    from logset_spark.sources.snapshots import (
+        SnapshotTriplesIO, open_warehouse)
 
+    io = open_warehouse(args.warehouse)
+    if not isinstance(io, SnapshotTriplesIO):
+        p.error("--warehouse must be snapshot-versioned (build_graph "
+                "--snapshots): table maintenance commits atomically "
+                "through the snapshot store")
     spark = get_spark("maintain_table", cpus=args.cpus)
-    store = SnapshotTriplesIO(root=args.warehouse).store
+    store = io.store
     out: dict = {"warehouse": args.warehouse,
                  "version_before": store.current_version()}
     if args.delete_where:

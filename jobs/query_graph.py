@@ -157,7 +157,8 @@ def main(argv=None) -> int:
 
     from logset_spark.operators.sparql import sparql
     from logset_spark.session import get_spark
-    from logset_spark.sources.tableio import TableIO
+    from logset_spark.sources.snapshots import (
+        SnapshotTriplesIO, open_warehouse)
     from logset_spark.sources.turtle import load_catalog
 
     if args.named_graphs and not args.catalog:
@@ -197,17 +198,15 @@ def main(argv=None) -> int:
         enc = spark.read.parquet(os.path.join(args.encoded, "triples"))
         dic = spark.read.parquet(os.path.join(args.encoded, "terms"))
         return _emit(p, args, spark, sparql_encoded(enc, dic, query))
+    io = open_warehouse(args.warehouse) if args.warehouse else None
+    if snap_flags and not isinstance(io, SnapshotTriplesIO):
+        p.error("--as-of/--changed-since need a --warehouse built "
+                "with --snapshots")
     if args.catalog:
-        if snap_flags:
-            p.error("--as-of/--changed-since need a --warehouse built "
-                    "with --snapshots")
         triples = load_catalog(spark, args.catalog,
                                follow_links=args.follow_links,
                                named_graphs=args.named_graphs)
     elif args.catalog_bulk:
-        if snap_flags:
-            p.error("--as-of/--changed-since need a --warehouse built "
-                    "with --snapshots")
         if args.follow_links or args.named_graphs:
             p.error("--catalog-bulk parses one self-contained document "
                     "(no link following / named graphs); use --catalog")
@@ -215,9 +214,6 @@ def main(argv=None) -> int:
 
         triples = load_turtle_bulk(spark, args.catalog_bulk)
     elif args.nquads:
-        if snap_flags:
-            p.error("--as-of/--changed-since need a --warehouse built "
-                    "with --snapshots")
         from pyspark.sql import functions as F
 
         from logset_spark.sources.ntriples import from_nquads
@@ -235,30 +231,19 @@ def main(argv=None) -> int:
             F.when(F.col("graph") == "", F.lit(None).cast("string"))
             .otherwise(F.col("graph")),
         )
+    elif args.changed_since is not None:
+        triples = io.store.incremental_read(
+            spark, args.changed_since, to_version=args.as_of)
+    elif args.as_of is not None:
+        triples = io.read_version(spark, args.as_of)
     else:
-        if os.path.isdir(os.path.join(args.warehouse, "triples", "_meta")):
-            from logset_spark.sources.snapshots import SnapshotTriplesIO
-
-            store = SnapshotTriplesIO(root=args.warehouse).store
-            if isinstance(args.as_of, str):  # named ref -> version
-                args.as_of = store.ref_version(args.as_of)
-            if args.changed_since is not None:
-                triples = store.incremental_read(
-                    spark, args.changed_since, to_version=args.as_of)
-            else:
-                triples = store.read(spark, version=args.as_of)
-        elif snap_flags:
-            p.error("--as-of/--changed-since need a --warehouse built "
-                    "with --snapshots")
-        else:
-            triples = TableIO(root=args.warehouse).read(spark, "triples")
+        triples = io.read(spark, "triples")
     if args.provenance:
         from logset_spark.operators.provenance import (
             provenance_quads,
             with_provenance,
         )
 
-        io = TableIO(root=args.warehouse)
         triples = with_provenance(
             triples, provenance_quads(spark, io))
     if args.skolemize:
@@ -296,12 +281,8 @@ def main(argv=None) -> int:
         if path.endswith(".ttl") or path.endswith(".trig"):
             services[iri] = load_catalog(spark, path,
                                          follow_links=args.follow_links)
-        elif os.path.isdir(os.path.join(path, "triples", "_meta")):
-            from logset_spark.sources.snapshots import SnapshotTriplesIO
-
-            services[iri] = SnapshotTriplesIO(root=path).store.read(spark)
         else:
-            services[iri] = TableIO(root=path).read(spark, "triples")
+            services[iri] = open_warehouse(path).read(spark, "triples")
     stats = None
     if args.analyze and not args.star:
         from logset_spark.operators.sparql import analyze, load_stats

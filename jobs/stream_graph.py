@@ -71,9 +71,9 @@ def main(argv=None) -> int:
 
     store = None
     if args.snapshots:
-        from logset_spark.sources.snapshots import SnapshotTableIO
+        from logset_spark.sources.snapshots import SnapshotTriplesIO
 
-        store = SnapshotTableIO(root=f"{args.out}/triples")
+        store = SnapshotTriplesIO(root=args.out).store
         count, report_sink = (lambda: _store_count(store)), f"{args.out}/triples"
     else:
         count, report_sink = (lambda: _parquet_count(sink)), sink

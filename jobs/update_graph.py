@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 
@@ -57,14 +56,16 @@ def main(argv=None) -> int:
                 "sparql_update.graph_update over a named-graph source; "
                 "the warehouse triples table is a single default graph")
 
-    if not os.path.isdir(os.path.join(args.warehouse, "triples", "_meta")):
+    from logset_spark.sources.snapshots import (
+        SnapshotTriplesIO, open_warehouse)
+
+    io = open_warehouse(args.warehouse)
+    if not isinstance(io, SnapshotTriplesIO):
         p.error("--warehouse must be snapshot-versioned (build_graph "
                 "--snapshots): SPARQL Update commits atomically through "
                 "the snapshot store")
-    from logset_spark.sources.snapshots import SnapshotTriplesIO
-
     spark = get_spark("update_graph", cpus=args.cpus)
-    store = SnapshotTriplesIO(root=args.warehouse).store
+    store = io.store
     t0 = time.monotonic()
     version, n_del, n_ins = apply_update(
         store, spark, update, insert_ts=args.insert_ts)

@@ -43,11 +43,10 @@ def main(argv=None) -> int:
     p.add_argument("--cpus", type=int, default=None)
     args = p.parse_args(argv)
 
-    import os
-
     from logset_spark.operators.shacl import compile_shapes, validate
     from logset_spark.session import get_spark
-    from logset_spark.sources.tableio import TableIO
+    from logset_spark.sources.snapshots import (
+        SnapshotTriplesIO, open_warehouse)
     from logset_spark.sources.turtle import load_catalog, parse_turtle
 
     with open(args.shapes, encoding="utf-8") as fh:
@@ -61,20 +60,19 @@ def main(argv=None) -> int:
             p.error("--changed-since needs a snapshot --warehouse")
         triples = load_catalog(spark, args.catalog,
                                follow_links=args.follow_links)
-    elif os.path.isdir(os.path.join(args.warehouse, "triples", "_meta")):
-        from logset_spark.sources.snapshots import SnapshotTriplesIO
-
-        store = SnapshotTriplesIO(root=args.warehouse).store
-        triples = store.read(spark, version=args.as_of)
-        if args.changed_since is not None:
-            focus_scope = store.incremental_read(
-                spark, args.changed_since, to_version=args.as_of
-            ).select("subj")
     else:
-        if args.as_of is not None or args.changed_since is not None:
+        io = open_warehouse(args.warehouse)
+        if args.as_of is None and args.changed_since is None:
+            triples = io.read(spark, "triples")
+        elif not isinstance(io, SnapshotTriplesIO):
             p.error("--as-of/--changed-since need a --warehouse built "
                     "with --snapshots")
-        triples = TableIO(root=args.warehouse).read(spark, "triples")
+        else:
+            triples = io.read_version(spark, args.as_of)
+            if args.changed_since is not None:
+                focus_scope = io.store.incremental_read(
+                    spark, args.changed_since, to_version=args.as_of
+                ).select("subj")
 
     violations = validate(
         triples.select("subj", "pred", "obj"), shapes,

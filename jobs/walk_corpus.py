@@ -59,18 +59,11 @@ def main(argv=None) -> int:
         skipgram_pairs,
     )
     from logset_spark.session import get_spark
-    from logset_spark.sources.tableio import TableIO
+    from logset_spark.sources.snapshots import open_warehouse
 
     spark = get_spark("walk_corpus", cpus=args.cpus)
     t0 = time.monotonic()
-    import os
-
-    if os.path.isdir(os.path.join(args.warehouse, "triples", "_meta")):
-        from logset_spark.sources.snapshots import SnapshotTriplesIO
-
-        triples = SnapshotTriplesIO(root=args.warehouse).store.read(spark)
-    else:
-        triples = TableIO(root=args.warehouse).read(spark, "triples")
+    triples = open_warehouse(args.warehouse).read(spark, "triples")
 
     part_of = triples.where(F.col("pred") == "partOf").select(
         F.col("subj").alias("turn"), F.col("obj").alias("conv"))

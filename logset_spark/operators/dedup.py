@@ -127,36 +127,26 @@ def simhash_pairs(
     ).where(F.col("hamming") <= max_hamming)
 
 
-def minhash_pairs(
+def minhash_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 32,
     bands: int = 8,
-    threshold: float = 0.5,
 ) -> DataFrame:
-    """MinHash-LSH candidates + exact token-shingle Jaccard verify.
+    """MinHash-LSH candidate pairs (doc_a < doc_b sharing a band hash).
 
-    Shuffle discipline (VERDICT r04 §What's wrong 2): the banded frame
-    carries (id, band, band_hash) ONLY — never the document text.  The
-    old plan rode `txt` on every band row, i.e. `bands`x the corpus text
-    through the localCheckpoint and the self-join exchange, then
-    txt_a+txt_b on every candidate pair — the dominant shuffle cost at
-    corpus scale.  Now the LSH exchange moves 3 longs per band row; the
-    text is touched again only for docs that actually appear in a
-    candidate pair, via a semi-join (AQE broadcasts the candidate-id set
-    when it is small — the common case, since LSH exists precisely to
-    make the candidate set << corpus).
-
-    banded is locally checkpointed before the self-join — the branches
-    alias differently, so the MinHash expression would otherwise run
-    twice over the full corpus."""
-    slim = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
-    banded = band_signatures(slim, "txt", num_hashes, bands, unit="word").select(
-        "id", "band", "band_hash"
-    ).localCheckpoint()
+    The banded frame carries (id, band, band_hash) ONLY — never the
+    document text, so the LSH exchange moves 3 longs per band row.  It is
+    locally checkpointed before the self-join: the branches alias
+    differently, so the MinHash expression would otherwise run twice
+    over the full corpus."""
+    banded = band_signatures(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt")),
+        "txt", num_hashes, bands, unit="word",
+    ).select("id", "band", "band_hash").localCheckpoint()
     a, b = banded.alias("a"), banded.alias("b")
-    cand = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -166,6 +156,26 @@ def minhash_pairs(
         .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
         .distinct()
     )
+
+
+def minhash_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 32,
+    bands: int = 8,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """MinHash-LSH candidates (minhash_candidates) + exact token-shingle
+    Jaccard verify.
+
+    Shuffle discipline (VERDICT r04 §What's wrong 2): the document text
+    never rides the LSH exchange; it is touched again only for docs that
+    actually appear in a candidate pair, via a semi-join (AQE broadcasts
+    the candidate-id set when it is small — the common case, since LSH
+    exists precisely to make the candidate set << corpus)."""
+    cand = minhash_candidates(df, text_col, id_col, num_hashes, bands)
+    slim = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
 
     # shingle sets ONLY for candidate docs: semi-join scopes the second
     # corpus pass to ids that survived blocking.  word_shingles is the

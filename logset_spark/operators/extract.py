@@ -41,6 +41,16 @@ def structural_triples(transcripts: DataFrame) -> DataFrame:
     union would scan the transcript table once per predicate (6x I/O at
     10^12 turns); the explode form is a single narrow pass."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    next_u = F.lead(V.turn_uri("conv_id", "turn_idx")).over(w)
+    return _structural_rows(transcripts, next_u).withColumn(
+        "conf", F.lit(1.0))
+
+
+def _structural_rows(transcripts: DataFrame, next_u) -> DataFrame:
+    """Per-turn structural triples as (subj, pred, obj, conv_id, turn_idx,
+    ts): one array of (subj,pred,obj) structs per turn, exploded, entries
+    with a null obj dropped (no tool; `next_u` null = no followedBy — the
+    stream passes a null column, having no cross-row state)."""
     t = transcripts.select(
         "conv_id",
         "turn_idx",
@@ -50,7 +60,7 @@ def structural_triples(transcripts: DataFrame) -> DataFrame:
         V.role_uri("role").alias("role_u"),
         V.iso_ts("ts").alias("iso"),
         V.tool_uri("tool").alias("tool_u"),
-        F.lead(V.turn_uri("conv_id", "turn_idx")).over(w).alias("next_u"),
+        next_u.alias("next_u"),
     )
 
     def e(subj, pred, obj):
@@ -78,7 +88,6 @@ def structural_triples(transcripts: DataFrame) -> DataFrame:
         "conv_id",
         "turn_idx",
         "ts",
-        F.lit(1.0).alias("conf"),
     )
 
 

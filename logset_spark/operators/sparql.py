@@ -1673,7 +1673,7 @@ def bgp(
         if patterns:
             raise ValueError("patterns and unions are mutually exclusive")
         arm_res = []
-        var_order: list[str] = []
+        union_cols: list[str] = []
         for i, arm in enumerate(unions):
             arm_pats, arm_filters = (
                 arm if isinstance(arm, tuple) else (arm, [])
@@ -1684,17 +1684,22 @@ def bgp(
                 df = df.where(F.expr(_filter_to_expr(f)))
             vs = [c for c in df.columns if not c.startswith("_exists_")]
             arm_res.append((df, set(vs)))
-            var_order += [v for v in vs if v not in var_order]
+            union_cols += [v for v in vs if v not in union_cols]
+        # typed __num shadows ride the union (an arm without one gets a
+        # NULL double) so later FILTERs can prefer them, but they are
+        # never solution variables
         aligned = [
             df.select(*[
-                F.col(v) if v in vs else F.lit(None).cast("string").alias(v)
-                for v in var_order
+                F.col(v) if v in vs else F.lit(None).cast(
+                    "double" if v.endswith("__num") else "string").alias(v)
+                for v in union_cols
             ])
             for df, vs in arm_res
         ]
         acc = aligned[0]
         for d in aligned[1:]:
             acc = acc.unionByName(d)
+        var_order = [v for v in union_cols if not v.endswith("__num")]
     elif patterns:
         acc, var_order = _join_patterns(triples, patterns, stats=stats)
     elif values:
@@ -1737,9 +1742,14 @@ def bgp(
         shared = sorted(set(var_order) & set(opt_df.columns))
         if not shared:
             raise ValueError(f"OPTIONAL group {opt_pats} shares no variable")
-        acc = acc.join(opt_df, on=shared, how="left")
+        # keep the left side's __num shadow of a shared var (as in
+        # _join_patterns); the group's own shadows stay out of var_order
+        dup = [c for c in opt_df.columns
+               if c.endswith("__num") and c in acc.columns]
+        acc = acc.join(opt_df.drop(*dup), on=shared, how="left")
         var_order += [v for v in opt_df.columns
-                      if v not in var_order and not v.startswith("_exists_")]
+                      if v not in var_order and not v.startswith("_exists_")
+                      and not v.endswith("__num")]
     for vs, rows in values:
         cells = [
             tuple(None if x == _UNDEF else _const_term(x) for x in r)

@@ -1114,25 +1114,10 @@ def q_dedup_minhash(spark, sf):
     """MinHash-LSH near-dup candidate pairs on documents (rows-only check:
     signature values are engine-specific).  Same operator family as the
     entity-linking fuzzy stage."""
-    from .operators.link import band_signatures
+    from .operators.dedup import minhash_candidates
 
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    banded = band_signatures(d, "text", num_hashes=32, bands=8, unit="word").select(
-        "doc_id", "band", "band_hash"
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    return minhash_candidates(_t(spark, sf, "documents"), "text", "doc_id",
+                              num_hashes=32, bands=8)
 
 
 def q_dedup_simhash(spark, sf):

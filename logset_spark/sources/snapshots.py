@@ -48,6 +48,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .tableio import DEFAULT_BUCKETS, TableIO
 
+# Snapshot metadata dir under a versioned table's root; its presence is
+# what marks the table as versioned (see is_versioned / open_warehouse).
+META_DIR = "_meta"
+
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer advanced the head between this commit's
@@ -111,7 +115,7 @@ class SnapshotTableIO:
 
     @property
     def _meta(self) -> str:
-        return os.path.join(self.root, "_meta")
+        return os.path.join(self.root, META_DIR)
 
     @property
     def _data(self) -> str:
@@ -940,7 +944,7 @@ class SnapshotTableIO:
 
     def incremental_read(
         self, spark: SparkSession, from_version: int,
-        to_version: int | None = None,
+        to_version: int | str | None = None,
     ) -> DataFrame:
         """Rows ADDED between two snapshots (Iceberg's incremental append
         scan — the CDC primitive downstream consumers poll instead of
@@ -955,12 +959,13 @@ class SnapshotTableIO:
         files into a new commit.  Cost is proportional to what changed,
         never to the table — the property that makes a 100 TB table
         consumable by an every-5-minutes reader.  `from_version=0` = all
-        rows ever added up to `to_version`.
+        rows ever added up to `to_version` (default: latest; also takes a
+        ref name).
 
         Needs the in-range snapshot metadata (and commit dirs) to still
         be retained: scanning across an expired boundary raises instead
         of silently under-reporting changes."""
-        to_v = self.current_version() if to_version is None else to_version
+        to_v = self._resolve(to_version)
         if from_version > to_v:
             raise ValueError(
                 f"from_version {from_version} is newer than {to_v}"
@@ -1262,8 +1267,10 @@ class SnapshotTriplesIO(TableIO):
             return super().read(spark, name)
         return self.store.read(spark)
 
-    def read_version(self, spark: SparkSession, version: int) -> DataFrame:
-        """Time-travel read of the triples table (VERSION AS OF)."""
+    def read_version(self, spark: SparkSession,
+                     version: int | str) -> DataFrame:
+        """Time-travel read of the triples table (VERSION AS OF a version
+        number or ref name)."""
         return self.store.read(spark, version=version)
 
     def partition_dirs(self, name: str) -> list[str]:
@@ -1272,3 +1279,21 @@ class SnapshotTriplesIO(TableIO):
         if self.store.current_version() == 0:
             return []
         return self.store.partition_dirs()
+
+
+def is_versioned(table_path: str) -> bool:
+    """True when the table at `table_path` is snapshot-versioned: its
+    files on disk are every commit ever written, and only the snapshot
+    manifest says which of them are current."""
+    return os.path.isdir(os.path.join(table_path, META_DIR))
+
+
+def open_warehouse(root: str) -> TableIO:
+    """The one opener for a built warehouse (build_graph / stream_graph
+    --out): a SnapshotTriplesIO when its triples table is snapshot-
+    versioned, a plain TableIO otherwise.  Either way
+    `io.read(spark, "triples")` returns the CURRENT triples; time travel
+    (`io.store`, `io.read_version`) exists on the snapshot kind only."""
+    if is_versioned(os.path.join(root, "triples")):
+        return SnapshotTriplesIO(root=root)
+    return TableIO(root=root)

@@ -138,6 +138,14 @@ class TableIO:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         if self.catalog == "iceberg":  # pragma: no cover
             return spark.table(self.path(name))
+        from .snapshots import is_versioned
+
+        if is_versioned(self.path(name)):
+            # a plain read of a versioned table returns every commit
+            # ever written (superseded and deleted rows included)
+            raise ValueError(
+                f"{self.path(name)} is a snapshot-versioned table; open "
+                "its warehouse with sources.snapshots.open_warehouse")
         return spark.read.parquet(self.path(name))
 
     def partition_dirs(self, name: str) -> list[str]:

@@ -10,8 +10,15 @@ deployments that prefer a streaming runtime:
   directory with `trigger(availableNow=True)`: processes exactly the
   not-yet-seen files recorded in the stream checkpoint, then stops — the
   streaming twin of the manifest left-anti join (X1).
-* `structural_triples_stream` — the SAME extraction plan as batch Stage 1
-  minus cross-turn edges (those need per-conv state, below).
+* `structural_triples_stream` — batch extract.structural_triples' own
+  struct array (one helper builds both) with a null next-turn column:
+  no cross-turn edges (those need per-conv state, below).
+* `snapshot_batch_sink` / `run_available_now_snapshot` — each micro-batch
+  as a batch-id-stamped append snapshot.  The replay check that makes it
+  exactly-once lives in `snapshot_batch_sink` only; the linked sink
+  commits through it too.  The resulting warehouse
+  (`jobs/stream_graph.py --snapshots`) is read like a built one, through
+  `sources.snapshots.open_warehouse`.
 * `linked_triples_batch` / `run_linked_available_now` — the FULL
   extraction+linking pipeline per micro-batch via foreachBatch, through
   the operators batch stage 4 itself uses (pipeline.rewrite_packed /
@@ -52,41 +59,13 @@ def stream_transcripts(spark: SparkSession, path: str) -> DataFrame:
 
 
 def structural_triples_stream(transcripts: DataFrame) -> DataFrame:
-    """Per-turn structural triples on a streaming DataFrame — identical
-    URI minting to batch extract.structural_triples, minus the followedBy
-    edge (cross-row state; see module docstring)."""
-    from .. import vocab as V
+    """Per-turn structural triples on a streaming DataFrame — batch
+    extract.structural_triples' own struct array, with a null next-turn
+    column in place of its conv_id window, so no followedBy edge (cross-
+    row state; see module docstring) and no conf column."""
+    from ..operators.extract import _structural_rows
 
-    t = transcripts.select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        V.conv_uri("conv_id").alias("conv_u"),
-        V.turn_uri("conv_id", "turn_idx").alias("turn_u"),
-        V.role_uri("role").alias("role_u"),
-        V.iso_ts("ts").alias("iso"),
-        V.tool_uri("tool").alias("tool_u"),
-    )
-
-    def e(subj, pred, obj):
-        return F.struct(subj.alias("subj"), F.lit(pred).alias("pred"), obj.alias("obj"))
-
-    entries = F.array(
-        e(F.col("conv_u"), V.HAS_TURN, F.col("turn_u")),
-        e(F.col("turn_u"), V.PART_OF, F.col("conv_u")),
-        e(F.col("turn_u"), V.HAS_ROLE, F.col("role_u")),
-        e(F.col("turn_u"), V.AT_TIME, F.col("iso")),
-        e(F.col("turn_u"), V.USED_TOOL, F.col("tool_u")),
-    )
-    return t.select(
-        "conv_id", "turn_idx", "ts",
-        F.explode(F.filter(entries, lambda x: x["obj"].isNotNull())).alias("tr"),
-    ).select(
-        F.col("tr.subj").alias("subj"),
-        F.col("tr.pred").alias("pred"),
-        F.col("tr.obj").alias("obj"),
-        "conv_id", "turn_idx", "ts",
-    )
+    return _structural_rows(transcripts, F.lit(None).cast("string"))
 
 
 def windowed_tool_counts(
@@ -314,21 +293,20 @@ def linked_triples_sink(
     run jobs/build_graph.py periodically, or owl_materialize over the
     accumulated table, for the merge pass).  The detector is built once,
     driver-side, outside the stream (dictionary-scale).  With `store`,
-    commits are batch-id-deduped append snapshots (exactly-once, same
-    handshake as snapshot_batch_sink); with `out_path`, plain parquet
-    appends (at-least-once)."""
+    commits go through snapshot_batch_sink (batch-id-deduped append
+    snapshots, exactly-once); with `out_path`, plain parquet appends
+    (at-least-once)."""
+
+    if store is not None:
+        commit = snapshot_batch_sink(store)
+    else:
+        def commit(triples: DataFrame, _batch_id: int) -> None:
+            triples.write.mode("append").parquet(out_path)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        triples = linked_triples_batch(
+        commit(linked_triples_batch(
             batch_df, _detector, dictionary, fuzzy_threshold, _prefiltered
-        )
-        if store is not None:
-            last = store.last_batch_id()
-            if last is not None and batch_id <= last:
-                return  # replayed micro-batch: already durably committed
-            store.commit(triples, mode="append", batch_id=batch_id)
-        else:
-            triples.write.mode("append").parquet(out_path)
+        ), batch_id)
 
     from ..operators import extract
 

@@ -224,3 +224,38 @@ def test_typed_filter_prefers_numeric_and_falls_back_lexically(spark, tmp_path):
     plain, _ = from_ntriples(spark, str(p))
     got = sorted(r["s"] for r in sparql(plain, q).collect())
     assert got == ["http://e/a", "http://e/c"]
+
+
+def test_typed_shadow_stays_out_of_union_and_optional(spark, tmp_path):
+    """The ?v__num typed shadow is FILTER plumbing, never a solution
+    column: SELECT * over UNION arms or an OPTIONAL group that binds ?v
+    at object position returns only ?s ?v (no v__num column, no
+    ambiguous reference), and a numeric FILTER over a union still
+    compares the typed value."""
+    from logset_spark.operators.sparql import bgp, sparql
+    from logset_spark.sources.ntriples import from_ntriples
+
+    p = tmp_path / "t.nt"
+    p.write_text(
+        '<http://e/a> <http://e/p> "10"^^<http://www.w3.org/2001/XMLSchema#integer> .\n'
+        '<http://e/b> <http://e/q> "9"^^<http://www.w3.org/2001/XMLSchema#integer> .\n'
+        '<http://e/c> <http://e/p> "95" .\n'
+    )
+    typed, _ = from_ntriples(spark, str(p), typed=True)
+    arms = "{ ?s <http://e/p> ?v } UNION { ?s <http://e/q> ?v }"
+    union = sparql(typed, f"SELECT * WHERE {{ {arms} }}")
+    assert union.columns == ["s", "v"]
+    assert sorted(map(tuple, union.collect())) == [
+        ("http://e/a", "10"), ("http://e/b", "9"), ("http://e/c", "95")]
+    filtered = bgp(typed, [], filters=["?v > 9"], select=["s"], unions=[
+        [("?s", "<http://e/p>", "?v")], [("?s", "<http://e/q>", "?v")]])
+    assert [r["s"] for r in filtered.collect()] == ["http://e/a"]
+
+    opt = sparql(typed, "SELECT * WHERE { ?s <http://e/p> ?v . "
+                        "OPTIONAL { ?s <http://e/p> ?v } }")
+    assert opt.columns == ["s", "v"]
+    assert sorted(map(tuple, opt.collect())) == [
+        ("http://e/a", "10"), ("http://e/c", "95")]
+    opt_new = sparql(typed, "SELECT * WHERE { ?s <http://e/p> ?v . "
+                            "OPTIONAL { ?s <http://e/q> ?w } }")
+    assert opt_new.columns == ["s", "v", "w"]

@@ -387,6 +387,15 @@ def test_sparql_constant_graph_prunes_partitions(spark, tmp_path):
     assert "PushedFilters: [" in plan
 
 
+def test_dedup_minhash_signs_each_document_once(spark, sf_dir):
+    """q_dedup_minhash shares dedup.minhash_candidates with minhash_pairs:
+    the banded frame is checkpointed before the LSH self-join, so the
+    signature (crc32 over each word unit) is not planned once per join
+    branch."""
+    fn, _ = REGISTRY["q_dedup_minhash"]
+    assert _plan(fn(spark, sf_dir)).count("crc32(") <= 1
+
+
 def test_minhash_hashed_once_above_dedup(spark, tmp_path):
     """The native MinHash runs once per DISTINCT form: crc32 (the unit
     hash, the first step of the signature) appears exactly once in the
