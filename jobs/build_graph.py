@@ -95,6 +95,11 @@ def main(argv=None) -> int:
     io = io_cls(args.out, n_buckets=args.buckets, n_write_salts=args.write_salts)
     if args.full_refresh:
         io.full_refresh = True
+    if args.snapshots:
+        try:
+            io.check_buckets()
+        except ValueError as exc:
+            p.error(str(exc))
     timings: dict = {}
     result = build_graph(
         spark, transcripts, dictionary, io,

@@ -655,7 +655,7 @@ def build_graph(
     if gc_stale_checkpoints:
         for stale in io.list_runs(STAGE_TRIPLES):
             if stale != run_id:
-                io.remove(_stage_name(stale), spark)
+                io.remove(_stage_name(stale))
     t0 = time.monotonic()
     marks: list[tuple[str, float]] = []
 
@@ -809,7 +809,7 @@ def build_graph(
     # Successful completion: the run-scoped stage-1 checkpoint is dead
     # weight now (resume consults the manifest and skips before reading
     # it) — drop it so stale buckets can never leak into a later run.
-    io.remove(_stage_name(run_id), spark)
+    io.remove(_stage_name(run_id))
     _mark("finalize")
     links.unpersist()
     if pending_final is not None:

@@ -22,7 +22,18 @@ expired (Iceberg's `expireSnapshots`).  A snapshot's manifest maps each
 logical partition (ts_day, conv_bucket) to the list of commits whose
 files constitute it; dynamic partition-overwrite repoints only the keys
 present in the incoming frame, append extends their commit lists, and
-rollback copies an older mapping forward as a NEW snapshot.
+rollback copies an older mapping forward as a NEW snapshot.  The
+table's bucket count is recorded in its first snapshot and carried
+forward, so every later commit lays rows out the same way whatever
+count the opening handle was built with.
+
+MERGE, DELETE and UPDATE are one copy-on-write rewrite (`_rewrite`): the
+touched partitions are read, filtered by the operation's keep step,
+unioned with its inserts and committed as one dynamic overwrite.  A
+rewrite that inserted no row is labelled `delete` and contributes
+nothing to `incremental_read`; one that did is labelled `update` and
+contributes every row of the partitions it rewrote (a superset of its
+inserts: `diff` gives the exact '+' set).
 
 Scale notes (100 TB): the manifest is partition-level, not file-level —
 its size is O(days x buckets), thousands of entries, driver-trivial, and
@@ -46,7 +57,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .tableio import DEFAULT_BUCKETS, TableIO
+from ..session import local_frame
+from .tableio import DEFAULT_BUCKETS, TableIO, with_layout
 
 # Snapshot metadata dir under a versioned table's root; its presence is
 # what marks the table as versioned (see is_versioned / open_warehouse).
@@ -77,6 +89,19 @@ _NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 
 def _part_val(v) -> str:
     return _NULL_PART if v is None else str(v)
+
+
+_LAYOUT = ("ts_day", "conv_bucket")
+
+
+def _partition_counts(df: DataFrame) -> dict[tuple[str, str], int]:
+    """Row count per (ts_day, conv_bucket) of a layout-carrying frame,
+    keyed the way mapping keys spell partitions.  Bounded by days x
+    buckets: driver-tiny."""
+    return {
+        (_part_val(r["ts_day"]), _part_val(r["conv_bucket"])): r["count"]
+        for r in df.groupBy(*_LAYOUT).count().collect()
+    }
 
 
 def _enc_stat(v):
@@ -132,15 +157,39 @@ class SnapshotTableIO:
     def _snap_path(self, version: int) -> str:
         return os.path.join(self._meta, f"v{version:06d}.json")
 
-    def _load_snapshot(self, version: int) -> dict:
+    def _snapshot_or_none(self, version: int) -> dict | None:
+        """Snapshot `version`'s JSON, or None when it was expired (or
+        never written)."""
         path = self._snap_path(version)
         if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            return json.load(f)
+
+    def _load_snapshot(self, version: int) -> dict:
+        snap = self._snapshot_or_none(version)
+        if snap is None:
             raise ValueError(
                 f"snapshot v{version} does not exist or was expired "
                 f"(current={self.current_version()})"
             )
-        with open(path) as f:
-            return json.load(f)
+        return snap
+
+    def _commit_dir(self, commit: int) -> str:
+        return os.path.join(self._data, f"commit={commit}")
+
+    def _leaf(self, commit: int, key: str) -> str:
+        """The data dir of logical partition `key` ("<day>|<bucket>")
+        inside `commit`."""
+        day, bucket = key.split("|", 1)
+        return os.path.join(self._commit_dir(commit), f"ts_day={day}",
+                            f"conv_bucket={bucket}")
+
+    def recorded_buckets(self) -> int | None:
+        """The bucket count the current snapshot records; None for an
+        empty table or a snapshot predating the bookkeeping."""
+        cur = self.current_version()
+        return self._load_snapshot(cur).get("n_buckets") if cur else None
 
     def _publish(self, snap: dict, branch: str | None = None) -> None:
         """Write the snapshot file, then atomically advance the pointer.
@@ -302,8 +351,7 @@ class SnapshotTableIO:
         rows = [("main", "branch", self.current_version())]
         rows += [(n, "tag", v) for n, v in sorted(refs["tags"].items())]
         rows += [(n, "branch", v) for n, v in sorted(refs["branches"].items())]
-        return spark.createDataFrame(
-            rows, "name string, kind string, version int")
+        return local_frame(spark, rows, "name string, kind string, version int")
 
     def _is_ancestor(self, anc: int, desc: int) -> bool:
         """True when `anc` is on `desc`'s parent chain (or equal)."""
@@ -342,10 +390,11 @@ class SnapshotTableIO:
 
     # ---- write path --------------------------------------------------------
 
-    def _written_partitions(self, commit: int) -> list[tuple[str, str]]:
-        """(ts_day, conv_bucket) dirs the commit created.  Directory-level
-        listing: O(days x buckets) entries, never per-file."""
-        base = os.path.join(self._data, f"commit={commit}")
+    def _written_keys(self, commit: int) -> list[str]:
+        """Mapping keys of the (ts_day, conv_bucket) dirs the commit
+        created.  Directory-level listing: O(days x buckets) entries,
+        never per-file."""
+        base = self._commit_dir(commit)
         out = []
         for day_dir in sorted(os.listdir(base)):
             if not day_dir.startswith("ts_day="):
@@ -353,7 +402,7 @@ class SnapshotTableIO:
             day = day_dir.split("=", 1)[1]
             for b_dir in sorted(os.listdir(os.path.join(base, day_dir))):
                 if b_dir.startswith("conv_bucket="):
-                    out.append((day, b_dir.split("=", 1)[1]))
+                    out.append(_key(day, b_dir.split("=", 1)[1]))
         return out
 
     def commit(
@@ -369,6 +418,9 @@ class SnapshotTableIO:
         branch: str | None = None,
     ) -> int:
         """Write `df` as a new immutable commit and publish the snapshot.
+        THE one writer: every data-bearing snapshot (CoW rewrites and
+        compaction included) goes through here, so the layout below has
+        one owner.
 
         mode="overwrite_partitions": Iceberg dynamic overwrite — partitions
             present in `df` are repointed to this commit; absent partitions
@@ -383,6 +435,11 @@ class SnapshotTableIO:
             partitions would leave the old partitions' stale rows live —
             correct Iceberg semantics, but not what "rebuild the table"
             means.
+
+        Layout: rows are bucketed by the count the parent snapshot
+        records (a table replace, or the first commit, records this
+        handle's `n_buckets`); a parent predating that bookkeeping uses
+        the handle's count and records none.
 
         `finisher`/`pre_sort` are TableIO.prepare's plan hooks (exchange-
         fused dedup, post-sort wide-column reconstruction) so the KG
@@ -399,6 +456,9 @@ class SnapshotTableIO:
         fully-emptied-partition case of DELETE (a dynamic overwrite
         repoints only partitions present in the frame, so without this
         an all-rows-deleted partition would silently keep its old files).
+        The commit may write no partition outside them: a row landing
+        elsewhere would repoint a partition without its current rows, so
+        that raises before the publish.
 
         `stats_cols`: columns to record per-partition [min, max] for in
         the snapshot manifest (Iceberg's manifest-level column stats) —
@@ -407,8 +467,8 @@ class SnapshotTableIO:
         metadata alone.
 
         `operation`: snapshot-history label override (defaults to the
-        mode); `delete` commits use it so the incremental append scan
-        knows no NEW rows were added.
+        mode); `incremental_read` decides from it whether the commit
+        added rows.
 
         `branch`: commit onto a named branch (created with `branch()`)
         instead of main — parent is the BRANCH head and only the branch
@@ -422,40 +482,40 @@ class SnapshotTableIO:
             raise ValueError(f"{branch!r} is not a branch")
         parent = (self.ref_version(branch) if branch is not None
                   else self.current_version())
+        base = (self._load_snapshot(parent)
+                if parent and mode != "overwrite_table" else {})
+        n_buckets = base.get("n_buckets", self.n_buckets)
         version = self._reserve_version()
-        commit_dir = os.path.join(self._data, f"commit={version}")
+        commit_dir = self._commit_dir(version)
         if os.path.isdir(commit_dir):
             # a crashed earlier attempt wrote data but never published —
             # unreachable from every snapshot (the pointer never moved), so
             # clearing it is safe and makes resume re-runs possible
             shutil.rmtree(commit_dir)
         prepared = TableIO(
-            root=self.root, n_buckets=self.n_buckets,
+            root=self.root, n_buckets=n_buckets,
             n_write_salts=self.n_write_salts,
         ).prepare(df, finisher=finisher, pre_sort=pre_sort)
         (
             prepared.write.mode("errorifexists")
-            .partitionBy("ts_day", "conv_bucket")
+            .partitionBy(*_LAYOUT)
             .parquet(commit_dir)
         )
-        mapping: dict[str, list[int]] = (
-            dict(self._load_snapshot(parent)["mapping"])
-            if parent and mode != "overwrite_table" else {}
-        )
-        written = self._written_partitions(version)
-        written_keys = set()
-        for day, bucket in written:
-            k = _key(day, bucket)
-            written_keys.add(k)
+        mapping: dict[str, list[int]] = dict(base.get("mapping", {}))
+        written = set(self._written_keys(version))
+        if replaced_partitions is not None:
+            replaced = {_key(str(d), str(b)) for d, b in replaced_partitions}
+            if not written <= replaced:
+                raise ValueError(
+                    f"commit v{version} wrote partitions outside the ones "
+                    f"it replaces: {sorted(written - replaced)[:5]}")
+            for k in replaced - written:
+                mapping.pop(k, None)  # partition fully emptied
+        for k in written:
             if mode == "append" and k in mapping:
                 mapping[k] = mapping[k] + [version]
             else:
                 mapping[k] = [version]
-        if replaced_partitions:
-            for day, bucket in replaced_partitions:
-                k = _key(str(day), str(bucket))
-                if k in mapping and k not in written_keys:
-                    del mapping[k]  # partition fully emptied by this commit
         snap = {
             "version": version,
             "parent": parent,
@@ -465,10 +525,11 @@ class SnapshotTableIO:
             # evolution bookkeeping, so reads can decide from metadata
             # alone whether a parquet schema merge is needed
             "columns": [
-                c for c in prepared.schema.fieldNames()
-                if c not in ("ts_day", "conv_bucket")
+                c for c in prepared.schema.fieldNames() if c not in _LAYOUT
             ],
         }
+        if "n_buckets" in base or not base:
+            snap["n_buckets"] = n_buckets
         if batch_id is not None:
             snap["batch_id"] = batch_id
         if stats_cols:
@@ -492,7 +553,7 @@ class SnapshotTableIO:
 
         for c in stats_cols:
             aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-        rows = sdf.groupBy("ts_day", "conv_bucket").agg(*aggs).collect()
+        rows = sdf.groupBy(*_LAYOUT).agg(*aggs).collect()
         return {
             _key(str(r["ts_day"]), str(r["conv_bucket"])): {
                 c: [_enc_stat(r[f"__mn_{c}"]), _enc_stat(r[f"__mx_{c}"])]
@@ -501,61 +562,90 @@ class SnapshotTableIO:
             for r in rows
         }
 
-    def _commit_columns(self, commits: set[int]) -> list[list[str]]:
-        """Distinct data-column lists across a set of commits, from
-        snapshot metadata only.  A commit predating the schema-evolution
-        bookkeeping (no "columns" key) reports None and forces the
-        conservative merge path."""
-        seen: list[list[str] | None] = []
+    def _read_paths(
+        self, spark: SparkSession, paths: list[str], commits: set[int]
+    ) -> DataFrame:
+        """THE parquet read of snapshot leaf dirs: a shared basePath so
+        ts_day/conv_bucket come back as partition columns, the transient
+        commit level dropped, and a schema merge only when the spanned
+        commits recorded different data columns — or when a commit whose
+        metadata was expired (schema unknown) spans others.  The decision
+        comes from snapshot metadata alone; the common single-schema read
+        never pays mergeSchema's footer scan."""
+        variants: list[list[str] | None] = []
         for c in sorted(commits):
-            path = self._snap_path(c)
-            if os.path.exists(path):
-                with open(path) as f:
-                    cols = json.load(f).get("columns")
-            else:
-                # the commit's own snapshot metadata was expired while a
-                # later retained snapshot still references its files —
-                # schema unknown, degrade to the conservative merge
-                cols = None
-            if cols not in seen:
-                seen.append(cols)
-        return seen
-
-    def _needs_merge(self, commits: set[int]) -> bool:
-        """True when a read spanning `commits` must merge parquet schemas:
-        the recorded column lists differ, or any spanned commit's schema
-        is unknown (expired metadata) alongside others."""
-        variants = self._commit_columns(commits)
-        return len(variants) > 1 or (None in variants and len(commits) > 1)
+            cols = (self._snapshot_or_none(c) or {}).get("columns")
+            if cols not in variants:
+                variants.append(cols)
+        reader = spark.read.option("basePath", self._data)
+        if len(variants) > 1 or (None in variants and len(commits) > 1):
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*paths).drop("commit")
 
     def _read_mapping_slice(
         self, spark: SparkSession, mapping: dict,
         keys: set[str] | None = None,
     ) -> DataFrame | None:
         """Read the partitions a mapping describes (all of them, or the
-        `keys` subset): builds the commit/ts_day/conv_bucket path list,
-        decides schema-merge from snapshot metadata, reads with the
-        shared basePath so partition columns come back, drops the
-        transient commit level.  Returns None when the slice is empty.
-        THE one read idiom for every CoW/diff/compact/read path — the
-        null-day bug class (and any future path-spelling change) has a
-        single home."""
+        `keys` subset); None when the slice is empty."""
         sel = (sorted(mapping) if keys is None
                else sorted(set(keys) & set(mapping)))
-        paths = [
-            os.path.join(self._data, f"commit={c}",
-                         f"ts_day={day}", f"conv_bucket={bucket}")
-            for k in sel
-            for day, bucket in [k.split("|", 1)]
-            for c in mapping[k]
-        ]
-        if not paths:
+        if not sel:
             return None
-        commits = {c for k in sel for c in mapping[k]}
-        reader = spark.read.option("basePath", self._data)
-        if self._needs_merge(commits):
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths).drop("commit")
+        return self._read_paths(
+            spark, [self._leaf(c, k) for k in sel for c in mapping[k]],
+            {c for k in sel for c in mapping[k]})
+
+    def _rewrite(
+        self, spark: SparkSession, touched: set[tuple[str, str]], keep,
+        inserts: DataFrame | None = None,
+        stats_cols: list[str] | None = None,
+    ) -> tuple[int, int]:
+        """THE copy-on-write rewrite (Iceberg's CoW plan, partition-
+        granular) behind merge_upsert, delete_where and cow_update:
+        `keep(slice, inserts)` filters the current rows of the touched
+        (ts_day, conv_bucket) partitions plus those the inserts land in,
+        the inserts are unioned on, and ONE overwrite-partitions commit
+        replaces exactly those partitions (a fully emptied one leaves the
+        mapping).  Untouched partitions keep their files, so the cost is
+        proportional to the touched slice, never the table.
+
+        The inserts are laid out and pinned first: their plan is read
+        more than once and may embed reads of this very store, and an
+        unpinned non-deterministic frame could land rows outside the
+        touched set.  Schema evolution: the kept rows keep the slice's
+        columns; a column either side lacks surfaces null
+        (allowMissingColumns).  Label: 'update' when a row was inserted,
+        'delete' otherwise — the one place `incremental_read`'s "did this
+        commit add rows" answer is decided.  Returns (version,
+        n_inserted); the version is unchanged when nothing is touched."""
+        cur = self.current_version()
+        snap = self._load_snapshot(cur) if cur else {}
+        n_ins = 0
+        if inserts is not None:
+            inserts = with_layout(
+                inserts, snap.get("n_buckets", self.n_buckets)
+            ).localCheckpoint()
+            landed = _partition_counts(inserts)
+            n_ins = sum(landed.values())
+            touched = set(touched) | set(landed)
+        if not touched:
+            return cur, 0
+        current = self._read_mapping_slice(
+            spark, snap.get("mapping", {}), {_key(d, b) for d, b in touched})
+        parts = []
+        if current is not None:
+            cols = [c for c in current.columns if c not in _LAYOUT]
+            parts.append(keep(current, inserts).select(*cols))
+        if n_ins:
+            parts.append(inserts.drop(*_LAYOUT))
+        merged = parts[0]
+        if len(parts) > 1:
+            merged = merged.unionByName(parts[1], allowMissingColumns=True)
+        version = self.commit(
+            merged, replaced_partitions=touched, stats_cols=stats_cols,
+            operation="update" if n_ins else "delete")
+        return version, n_ins
 
     def merge_upsert(
         self, spark: SparkSession, updates: DataFrame, keys: list[str]
@@ -563,9 +653,7 @@ class SnapshotTableIO:
         """Copy-on-write MERGE (Iceberg MERGE INTO, partition-granular):
         rows in `updates` REPLACE current rows with equal `keys`; new keys
         INSERT.  Only the partitions the updates land in are read and
-        rewritten — the partition-pruned read + anti-join + one
-        overwrite-partitions commit is exactly Iceberg's copy-on-write
-        plan, so cost scales with the touched slice, never the table.
+        rewritten (`_rewrite`); on an empty table this is a plain insert.
 
         Constraint (same as any partition-granular CoW without a global
         index): a key's partition columns must be stable across the merge
@@ -573,54 +661,22 @@ class SnapshotTableIO:
         old copy in its old partition.  The transcript vocabulary's keys
         (conv_id, turn_idx) are partition-stable by construction.
 
-        Empty-table case: degenerates to a plain insert commit.
-
         Schema evolution: the KEPT side keeps the CURRENT table schema
         (an updates frame predating an add-column must not strip the
         evolved column from rows it never touched); a replacement row
         lacking an evolved column sets it null — the update frame IS
         the row's new state — and a column new to `updates` surfaces
-        null on kept rows, both via allowMissingColumns."""
-        if self.current_version() == 0:
-            return self.commit(updates)
+        null on kept rows."""
         from pyspark.sql import functions as F
 
-        from .tableio import with_layout
-
-        # pin: the updates plan is evaluated twice (touched discovery +
-        # the commit write) and may embed reads of this very store; an
-        # unpinned non-deterministic frame could land rows in partitions
-        # outside `touched`, repointing them WITHOUT carrying their
-        # current rows (cow_update pins for the same reason).  Bounded
-        # by the update set, never the table.
-        updates = with_layout(updates, self.n_buckets).localCheckpoint()
-        # touched partitions: bounded by days x buckets, driver-tiny
-        touched = {
-            (_part_val(r["ts_day"]), _part_val(r["conv_bucket"]))
-            for r in updates.select("ts_day", "conv_bucket")
-            .distinct().collect()
-        }
-        snap = self._load_snapshot(self.current_version())
-        current = self._read_mapping_slice(
-            spark, snap["mapping"], {_key(d, b) for d, b in touched}
-        )
-        upd_cols = [c for c in updates.columns
-                    if c not in ("ts_day", "conv_bucket")]
-        if current is not None:
-            data_cols = [c for c in current.columns
-                         if c not in ("ts_day", "conv_bucket")]
-            # keep current rows whose key is NOT updated; updates are the
-            # small side of the anti join -> broadcast
-            kept = current.select(*data_cols).join(
-                F.broadcast(updates.select(*keys).distinct()),
-                on=keys, how="left_anti",
-            )
-            merged = kept.unionByName(
-                updates.select(*upd_cols), allowMissingColumns=True
-            )
-        else:
-            merged = updates.select(*upd_cols)
-        return self.commit(merged)
+        # updates are the small side of the anti join -> broadcast
+        return self._rewrite(
+            spark, set(),
+            lambda cur, ins: cur.join(
+                F.broadcast(ins.select(*keys).distinct()),
+                on=keys, how="left_anti"),
+            inserts=updates,
+        )[0]
 
     def delete_where(
         self, spark: SparkSession, predicate,
@@ -628,49 +684,28 @@ class SnapshotTableIO:
     ) -> int:
         """Copy-on-write DELETE FROM ... WHERE (Iceberg CoW delete,
         partition-granular): partitions containing at least one matching
-        row are rewritten WITHOUT those rows in one fresh commit;
-        untouched partitions keep their files.  A partition whose every
-        row matches is dropped from the mapping outright
-        (`replaced_partitions`) — the case a plain dynamic overwrite
-        cannot express.
+        row are rewritten WITHOUT those rows in one fresh commit
+        (`_rewrite`); untouched partitions keep their files, and a
+        partition whose every row matches leaves the mapping.
 
         SQL DELETE null semantics: rows where the predicate is NULL are
         KEPT (only TRUE deletes), hence the coalesce below — `~cond`
         alone would silently delete null-predicate rows.
 
         The matching-partition discovery is one filtered, column-pruned
-        scan (the same scan Iceberg's CoW plan does); the rewrite cost is
-        proportional to the touched slice.  The snapshot's operation is
-        labeled 'delete' so the incremental append scan skips it — a
-        delete adds no new rows.  Returns the new version (or the current
-        one unchanged when nothing matches)."""
+        scan (the same scan Iceberg's CoW plan does).  Returns the new
+        version (or the current one unchanged when nothing matches)."""
         from pyspark.sql import functions as F
 
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        cur = self.current_version()
-        if cur == 0:
+        if self.current_version() == 0:
             raise ValueError("cannot delete from an empty table")
-        touched = {
-            (_part_val(r["ts_day"]), _part_val(r["conv_bucket"]))
-            for r in self.read(spark).where(cond)
-            .select("ts_day", "conv_bucket").distinct().collect()
-        }
-        if not touched:
-            return cur
-        snap = self._load_snapshot(cur)
-        current = self._read_mapping_slice(
-            spark, snap["mapping"], {_key(d, b) for d, b in touched}
-        )
-        kept = current.where(~F.coalesce(cond, F.lit(False)))
-        data_cols = [c for c in current.columns
-                     if c not in ("ts_day", "conv_bucket")]
-        return self.commit(
-            kept.select(*data_cols),
-            mode="overwrite_partitions",
-            replaced_partitions=touched,
+        touched = set(_partition_counts(self.read(spark).where(cond)))
+        return self._rewrite(
+            spark, touched,
+            lambda cur, _: cur.where(~F.coalesce(cond, F.lit(False))),
             stats_cols=stats_cols,
-            operation="delete",
-        )
+        )[0]
 
     def cow_update(
         self, spark: SparkSession,
@@ -684,88 +719,34 @@ class SnapshotTableIO:
         current rows whose `on`-key appears in `deletes` are removed,
         `inserts` rows (full data-column schema) are added, and only the
         partitions holding a deleted row OR receiving an insert are
-        rewritten — an insert-only partition's EXISTING rows ride along
-        in the rewrite (a dynamic overwrite repoints whole partitions,
-        so appending into one without carrying its current rows would
-        drop them).  Everything else keeps its files; the pre-update
+        rewritten (`_rewrite`) — an insert-only partition's EXISTING rows
+        ride along.  Everything else keeps its files; the pre-update
         state stays readable via time travel.
 
         Unlike delete_where's predicate, the delete condition here is
-        membership in a DataFrame — one anti-join on `on` (broadcast
-        when the delete set is small), which is how a join-scoped SQL
-        DELETE/MERGE plans on Iceberg too.
+        membership in a DataFrame — one anti-join on `on`, which is how a
+        join-scoped SQL DELETE/MERGE plans on Iceberg too.
 
         Returns (version, n_deleted, n_inserted); version is unchanged
         when the whole request is a no-op."""
-        from .tableio import with_layout
-
         cur = self.current_version()
-        if inserts is not None:
-            # layout + pin: the insert frame is read three times (touched
-            # partitions, count, commit) and may embed anti-joins against
-            # the store itself — pin it so all three see one state.
-            # Bounded by the insert set, not the table.
-            inserts = with_layout(inserts, self.n_buckets).localCheckpoint()
-        if cur == 0:
-            if inserts is None:
-                raise ValueError("cannot update an empty table")
-            n_ins = inserts.count()
-            data_cols = [c for c in inserts.columns
-                         if c not in ("ts_day", "conv_bucket")]
-            return (self.commit(inserts.select(*data_cols),
-                                stats_cols=stats_cols, operation="update"),
-                    0, n_ins)
-        touched: set[tuple[str, str]] = set()
-        n_del = 0
-        if deletes is not None:
+        if cur == 0 and inserts is None:
+            raise ValueError("cannot update an empty table")
+        hits: dict[tuple[str, str], int] = {}
+        if deletes is not None and cur:
             if on is None:
                 on = list(deletes.columns)
-            hits = (
-                self.read(spark).join(deletes.distinct(), on=on,
-                                      how="left_semi")
-                .groupBy("ts_day", "conv_bucket").count().collect()
-            )
-            touched |= {(_part_val(r["ts_day"]), _part_val(r["conv_bucket"]))
-                        for r in hits}
-            n_del = sum(r["count"] for r in hits)
-        n_ins = 0
-        if inserts is not None:
-            n_ins = inserts.count()
-            touched |= {
-                (_part_val(r["ts_day"]), _part_val(r["conv_bucket"]))
-                for r in inserts.select("ts_day", "conv_bucket")
-                .distinct().collect()
-            }
-        if not touched:
-            return cur, 0, 0
-        snap = self._load_snapshot(cur)
-        current = self._read_mapping_slice(
-            spark, snap["mapping"], {_key(d, b) for d, b in touched}
+            deletes = deletes.distinct()
+            hits = _partition_counts(
+                self.read(spark).join(deletes, on=on, how="left_semi"))
+        n_del = sum(hits.values())
+        version, n_ins = self._rewrite(
+            spark, set(hits),
+            lambda cur_df, _: (cur_df.join(deletes, on=on, how="left_anti")
+                               if n_del else cur_df),
+            inserts=inserts, stats_cols=stats_cols,
         )
-        merged = None
-        if current is not None:
-            kept = current
-            if deletes is not None and n_del:
-                kept = current.join(deletes.distinct(), on=on,
-                                    how="left_anti")
-            data_cols = [c for c in current.columns
-                         if c not in ("ts_day", "conv_bucket")]
-            merged = kept.select(*data_cols)
-        if inserts is not None and n_ins:
-            data_cols = [c for c in inserts.columns
-                         if c not in ("ts_day", "conv_bucket")]
-            ins = inserts.select(*data_cols)
-            merged = ins if merged is None else merged.unionByName(ins)
-        return (
-            self.commit(
-                merged,
-                mode="overwrite_partitions",
-                replaced_partitions=touched,
-                stats_cols=stats_cols,
-                operation="update",
-            ),
-            n_del, n_ins,
-        )
+        return version, n_del, n_ins
 
     def pruned_partition_dirs(
         self, col: str, lo=None, hi=None, version: int | None = None,
@@ -776,30 +757,18 @@ class SnapshotTableIO:
         actually skipped."""
         v = self.current_version() if version is None else version
         snap = self._load_snapshot(v)
-        stats_cache: dict[int, dict] = {}
-
-        def commit_stats(c: int) -> dict:
-            if c not in stats_cache:
-                path = self._snap_path(c)
-                if os.path.exists(path):
-                    with open(path) as f:
-                        stats_cache[c] = json.load(f).get("stats", {})
-                else:
-                    stats_cache[c] = {}
-            return stats_cache[c]
-
+        stats: dict[int, dict] = {}
         paths: list[str] = []
         kept_commits: set[int] = set()
         for k, commits in sorted(snap["mapping"].items()):
-            day, bucket = k.split("|", 1)
             for c in commits:
-                st = commit_stats(c).get(k, {}).get(col)
+                if c not in stats:
+                    stats[c] = (self._snapshot_or_none(c) or {}).get(
+                        "stats", {})
+                st = stats[c].get(k, {}).get(col)
                 if st is None or _stat_overlaps(st[0], st[1], lo, hi):
                     kept_commits.add(c)
-                    paths.append(
-                        os.path.join(self._data, f"commit={c}",
-                                     f"ts_day={day}", f"conv_bucket={bucket}")
-                    )
+                    paths.append(self._leaf(c, k))
         return paths, kept_commits
 
     def read_pruned(
@@ -821,10 +790,7 @@ class SnapshotTableIO:
         paths, kept_commits = self.pruned_partition_dirs(col, lo, hi, v)
         if not paths:
             return self.read(spark, v).limit(0)
-        reader = spark.read.option("basePath", self._data)
-        if self._needs_merge(kept_commits):
-            reader = reader.option("mergeSchema", "true")
-        out = reader.parquet(*paths).drop("commit")
+        out = self._read_paths(spark, paths, kept_commits)
         from pyspark.sql import functions as F
 
         if lo is not None:
@@ -857,11 +823,9 @@ class SnapshotTableIO:
             v = head
             while v > 0 and v not in seen:
                 seen.add(v)
-                path = self._snap_path(v)
-                if not os.path.exists(path):
+                snap = self._snapshot_or_none(v)
+                if snap is None:
                     break  # expired tail: its batches are long surpassed
-                with open(path) as f:
-                    snap = json.load(f)
                 b = snap.get("batch_id")
                 if b is not None and (best is None or b > best):
                     best = b
@@ -874,12 +838,15 @@ class SnapshotTableIO:
         (Iceberg rollback semantics)."""
         old = self._load_snapshot(to_version)
         version = self._reserve_version()
-        self._publish({
+        snap = {
             "version": version,
             "parent": self.current_version(),
             "operation": f"rollback_to_{to_version}",
             "mapping": old["mapping"],
-        })
+        }
+        if "n_buckets" in old:
+            snap["n_buckets"] = old["n_buckets"]
+        self._publish(snap)
         return version
 
     # ---- read path ---------------------------------------------------------
@@ -899,13 +866,9 @@ class SnapshotTableIO:
         `version` also takes a ref name (tag/branch/'main')."""
         v = self._resolve(version)
         snap = self._load_snapshot(v)
-        return [
-            os.path.join(self._data, f"commit={c}",
-                         f"ts_day={day}", f"conv_bucket={bucket}")
-            for k, commits in sorted(snap["mapping"].items())
-            for c in commits
-            for day, bucket in [k.split("|", 1)]
-        ]
+        return [self._leaf(c, k)
+                for k, commits in sorted(snap["mapping"].items())
+                for c in commits]
 
     def read(
         self, spark: SparkSession, version: int | str | None = None
@@ -953,10 +916,14 @@ class SnapshotTableIO:
         added data.  An append contributes exactly its new rows; a
         dynamic overwrite or table replace contributes its replacement
         rows (rewriting a partition IS the change); compactions and
-        rollbacks contribute nothing (a rewrite of old rows is not new data — Iceberg likewise
-        skips replace operations).  Commit dirs are immutable, so this
-        stays exact even when a LATER compaction folded the appended
-        files into a new commit.  Cost is proportional to what changed,
+        rollbacks contribute nothing (a rewrite of old rows is not new
+        data — Iceberg likewise skips replace operations).  A delete-only
+        copy-on-write rewrite ('delete') contributes nothing.  An
+        insert-bearing one ('update': merge_upsert, cow_update with
+        inserts) contributes every row of the partitions it rewrote, a
+        superset of its inserts; `diff` gives the exact '+' set.  Commit
+        dirs are immutable, so this stays exact even when a LATER
+        compaction folded the appended files into a new commit.  Cost is proportional to what changed,
         never to the table — the property that makes a 100 TB table
         consumable by an every-5-minutes reader.  `from_version=0` = all
         rows ever added up to `to_version` (default: latest; also takes a
@@ -986,32 +953,23 @@ class SnapshotTableIO:
         paths = []
         data_commits = set()
         for v, op in reversed(chain):
-            # 'update' (cow_update / SPARQL INSERT+DELETE) both rewrites
-            # partitions AND adds rows — by the "rewriting a partition IS
-            # the change" rule it must contribute, or CDC consumers
-            # silently miss every SPARQL-inserted row.  Only 'delete',
-            # compactions, and rollbacks (no new rows by construction)
-            # are skippable.
+            # 'update' both rewrites partitions AND adds rows — by the
+            # "rewriting a partition IS the change" rule it must
+            # contribute, or CDC consumers silently miss every inserted
+            # row.  Only 'delete', compactions, and rollbacks (no new
+            # rows by construction) are skippable.
             if op in ("append", "overwrite_partitions", "overwrite_table",
                       "update"):
-                commit_dir = os.path.join(self._data, f"commit={v}")
-                if not os.path.isdir(commit_dir):
+                if not os.path.isdir(self._commit_dir(v)):
                     raise ValueError(
                         f"commit {v} was expired; incremental read from "
                         f"{from_version} is no longer answerable"
                     )
                 data_commits.add(v)
-                paths.extend(
-                    os.path.join(commit_dir, f"ts_day={day}",
-                                 f"conv_bucket={bucket}")
-                    for day, bucket in self._written_partitions(v)
-                )
+                paths.extend(self._leaf(v, k) for k in self._written_keys(v))
         if not paths:
             return self.read(spark, to_v).limit(0)
-        reader = spark.read.option("basePath", self._data)
-        if self._needs_merge(data_commits):
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths).drop("commit")
+        return self._read_paths(spark, paths, data_commits)
 
     def diff(
         self, spark: SparkSession, from_version: int,
@@ -1074,13 +1032,12 @@ class SnapshotTableIO:
                       if os.path.isdir(self._meta) else [])
         for fname in meta_files:
             if fname.startswith("v") and fname.endswith(".json"):
-                with open(os.path.join(self._meta, fname)) as f:
-                    s = json.load(f)
+                s = self._load_snapshot(int(fname[1:-5]))
                 rows.append((s["version"], s["parent"], s["operation"],
                              len(s["mapping"])))
-        return spark.createDataFrame(
-            rows, "version int, parent int, operation string, n_partitions int"
-        )
+        return local_frame(
+            spark, rows,
+            "version int, parent int, operation string, n_partitions int")
 
     # ---- maintenance -------------------------------------------------------
 
@@ -1098,57 +1055,28 @@ class SnapshotTableIO:
         current = self.current_version()
         if current == 0:
             return None
-        snap = self._load_snapshot(current)
-        targets = {k: v for k, v in snap["mapping"].items()
-                   if len(v) >= min_commits}
+        mapping = self._load_snapshot(current)["mapping"]
+        targets = {k for k, v in mapping.items() if len(v) >= min_commits}
         if not targets:
             return None
-        version = self._reserve_version()
-        commit_dir = os.path.join(self._data, f"commit={version}")
-        if os.path.isdir(commit_dir):  # crashed earlier attempt
-            shutil.rmtree(commit_dir)
-        df = self._read_mapping_slice(spark, snap["mapping"], set(targets))
-        # rows already carry their layout columns from the read; restore
-        # the within-partition clustering when the sort keys survived into
-        # this table's schema
-        out = df.repartition("ts_day", "conv_bucket")
-        sort_keys = [c for c in ("conv_id", "turn_idx") if c in df.columns]
-        out = out.sortWithinPartitions("ts_day", "conv_bucket", *sort_keys)
-        (
-            out.write.mode("errorifexists")
-            .partitionBy("ts_day", "conv_bucket")
-            .parquet(commit_dir)
-        )
-        mapping = dict(snap["mapping"])
-        for k in targets:
-            mapping[k] = [version]
-        new_snap = {
-            "version": version,
-            "parent": current,
-            "operation": f"compact_{len(targets)}_partitions",
-            "mapping": mapping,
-            "columns": [c for c in df.schema.fieldNames()
-                        if c not in ("ts_day", "conv_bucket")],
-        }
         # stats preservation: routine maintenance must not degrade
-        # read_pruned — recompute [min, max] for every column the folded
-        # commits carried stats for (one column-pruned scan of the fresh
-        # commit; without this each compacted partition silently falls
-        # back to conservative full inclusion forever)
-        frag_commits = {c for v in targets.values() for c in v}
-        stat_cols: set[str] = set()
-        for c in frag_commits:
-            path = self._snap_path(c)
-            if os.path.exists(path):
-                with open(path) as f:
-                    for per_part in json.load(f).get("stats", {}).values():
-                        stat_cols.update(per_part)
-        if stat_cols:
-            new_snap["stats"] = self._partition_stats(
-                spark, commit_dir, sorted(stat_cols)
-            )
-        self._publish(new_snap)
-        return version
+        # read_pruned — the fresh commit records [min, max] for every
+        # column the folded commits carried stats for (without this each
+        # compacted partition silently falls back to conservative full
+        # inclusion forever)
+        stats_cols = sorted({
+            col
+            for c in {c for k in targets for c in mapping[k]}
+            for per_part in (self._snapshot_or_none(c) or {}).get(
+                "stats", {}).values()
+            for col in per_part
+        })
+        return self.commit(
+            self._read_mapping_slice(spark, mapping, targets),
+            replaced_partitions=[k.split("|", 1) for k in targets],
+            stats_cols=stats_cols,
+            operation=f"compact_{len(targets)}_partitions",
+        )
 
     def expire_snapshots(
         self, keep_from: int, reclaim_reserved_older_than_s: float = 86400.0
@@ -1248,11 +1176,25 @@ class SnapshotTriplesIO(TableIO):
             n_write_salts=self.n_write_salts,
         )
 
+    def check_buckets(self) -> None:
+        """The pipeline plans its partitions with this handle's
+        `n_buckets`, while the table keeps the count it recorded: a
+        different count is refused unless this write replaces the whole
+        table (`full_refresh`), which records the new count."""
+        recorded = self.store.recorded_buckets()
+        if not self.full_refresh and recorded not in (None, self.n_buckets):
+            raise ValueError(
+                f"{self.path(self.snapshot_table)} is laid out in "
+                f"{recorded} buckets, not {self.n_buckets}: build with "
+                f"--buckets {recorded}, or re-bucket the whole table with "
+                "--full-refresh")
+
     def write(self, df: DataFrame, name: str, mode: str = "overwrite",
               finisher=None, pre_sort=None) -> None:
         if name != self.snapshot_table:
             return super().write(df, name, mode, finisher=finisher,
                                  pre_sort=pre_sort)
+        self.check_buckets()
         if mode == "append":
             cmode = "append"
         elif self.full_refresh:
@@ -1293,7 +1235,9 @@ def open_warehouse(root: str) -> TableIO:
     --out): a SnapshotTriplesIO when its triples table is snapshot-
     versioned, a plain TableIO otherwise.  Either way
     `io.read(spark, "triples")` returns the CURRENT triples; time travel
-    (`io.store`, `io.read_version`) exists on the snapshot kind only."""
+    (`io.store`, `io.read_version`) exists on the snapshot kind only.
+    No bucket count is needed: the snapshot store lays every commit out
+    with the count its table recorded."""
     if is_versioned(os.path.join(root, "triples")):
         return SnapshotTriplesIO(root=root)
     return TableIO(root=root)

@@ -48,7 +48,6 @@ class TableIO:
 
     root: str
     n_buckets: int = DEFAULT_BUCKETS
-    catalog: str = "parquet"  # "iceberg" on a real cluster (needs runtime jar)
     # >1 spreads each (ts_day, conv_bucket) output partition over this many
     # writer tasks (extra repartition salt on subj) — the skew valve for a
     # hot day/bucket at cluster scale.  Costs n_write_salts files per
@@ -79,17 +78,6 @@ class TableIO:
         so FileFormatWriter sees its required partition-column ordering
         already satisfied and inserts no second sort (asserted in
         tests/test_plans.py::test_write_sorts_packed_rows_once)."""
-        if self.catalog == "iceberg":  # pragma: no cover - needs runtime jar
-            out = with_layout(df, self.n_buckets)
-            # pre_sort carries engine-independent semantics (the mention
-            # dedup), not just a physical hint — skipping it here would
-            # write duplicate rows on the iceberg path
-            out = pre_sort(out) if pre_sort else out
-            out = finisher(out) if finisher else out
-            (out.writeTo(self.path(name)).using("iceberg")
-             .partitionedBy(F.bucket(self.n_buckets, "conv_id"), F.days("ts"))
-             .createOrReplace())
-            return
         (
             self.prepare(df, finisher=finisher, pre_sort=pre_sort)
             .write.mode(mode)
@@ -136,8 +124,6 @@ class TableIO:
         return out
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        if self.catalog == "iceberg":  # pragma: no cover
-            return spark.table(self.path(name))
         from .snapshots import is_versioned
 
         if is_versioned(self.path(name)):
@@ -159,13 +145,8 @@ class TableIO:
 
         return sorted(glob.glob(f"{self.path(name)}/ts_day=*/conv_bucket=*"))
 
-    def remove(self, name: str, spark: SparkSession | None = None) -> None:
-        """Drop a table/directory (checkpoint GC).  The parquet catalog is
-        a filesystem tree; iceberg needs a catalog DROP through a session."""
-        if self.catalog == "iceberg":  # pragma: no cover - needs runtime jar
-            if spark is not None:
-                spark.sql(f"DROP TABLE IF EXISTS {self.path(name)}")
-            return
+    def remove(self, name: str) -> None:
+        """Drop a table/directory (checkpoint GC)."""
         shutil.rmtree(self.path(name), ignore_errors=True)
 
     def list_runs(self, name: str) -> list[str]:

@@ -87,10 +87,13 @@ def test_rollback_is_nondestructive(spark, store):
     # the rolled-over version is still readable
     assert store.read(spark, version=2) \
                 .filter(F.col("etype") == "v2").count() == df.count()
-    ops = {r["version"]: r["operation"]
-           for r in store.history(spark).collect()}
+    hist = store.history(spark)
+    ops = {r["version"]: r["operation"] for r in hist.collect()}
     assert ops == {1: "overwrite_partitions", 2: "overwrite_partitions",
                    3: "rollback_to_1"}
+    # driver rows come back as an Arrow-built LocalRelation (no Python worker)
+    assert hist._jdf.queryExecution().optimizedPlan().toString() \
+        .startswith("LocalRelation")
 
 
 def test_expire_gc_and_retained_reads(spark, store):
@@ -952,3 +955,79 @@ def test_expire_reclaims_crashed_reserved_placeholder(spark, store):
     # the table still reads and commits normally after reclamation
     v2 = store.commit(_frame(spark, _base_rows()))
     assert v2 > v1
+
+
+def _triple_frame(spark, rows):
+    """_frame rows as a triple store: one `t_<conv>_<turn> hasRole
+    <etype>` triple per turn, layout columns alongside."""
+    return _frame(spark, rows).select(
+        F.concat_ws("_", F.lit("t"), "conv_id", "turn_idx").alias("subj"),
+        F.lit("hasRole").alias("pred"), F.col("etype").alias("obj"),
+        "conv_id", "turn_idx", "ts")
+
+
+def test_delete_only_rewrite_is_a_delete(spark, tmp_path):
+    """Regression: a delete-only cow_update (the SPARQL DELETE DATA path)
+    was published as 'update', so incremental_read reported the
+    rewritten partition's surviving rows as added.  Every delete-only
+    rewrite is a 'delete', adds nothing, and leaves the same snapshot
+    as delete_where on the same row."""
+    from logset_spark.operators.sparql_update import apply_update
+
+    stores = {k: SnapshotTableIO(root=str(tmp_path / k), n_buckets=4)
+              for k in ("cow", "sparql", "where")}
+    for st in stores.values():
+        st.commit(_triple_frame(spark, _base_rows()))
+    gone = spark.createDataFrame([("t_c0_0", "hasRole", "msg")],
+                                 "subj string, pred string, obj string")
+    assert stores["cow"].cow_update(spark, deletes=gone) == (2, 1, 0)
+    assert apply_update(stores["sparql"], spark,
+                        "DELETE DATA { t_c0_0 hasRole msg }") == (2, 1, 0)
+    assert stores["where"].delete_where(spark, "subj = 't_c0_0'") == 2
+
+    def rows(st):
+        return sorted(tuple(r) for r in st.read(spark).collect())
+
+    want = rows(stores["where"])
+    assert len(want) == 17
+    for st in stores.values():
+        ops = {r["version"]: r["operation"]
+               for r in st.history(spark).collect()}
+        assert ops[2] == "delete"
+        assert st.incremental_read(spark, 1, 2).count() == 0
+        assert rows(st) == want
+
+
+def test_table_keeps_its_bucket_count(spark, tmp_path):
+    """Regression: the bucket count belonged to the handle, not the
+    table.  A 5-bucket table opened through open_warehouse (default 16)
+    re-bucketed the kept rows of a one-row delete by 16, and they
+    overwrote untouched 5-bucket partitions: 104 of 120 rows survived.
+    The first snapshot records the count and every later commit uses
+    it; a pipeline write with another count must be a full refresh."""
+    from logset_spark.sources.snapshots import (
+        SnapshotTriplesIO, open_warehouse)
+
+    rows = [(f"c{i}", t, f"2024-03-0{1 + i % 2} 0{t}:00:00", "msg")
+            for i in range(40) for t in range(3)]
+    df = _triple_frame(spark, rows)
+    SnapshotTableIO(root=str(tmp_path / "triples"), n_buckets=5).commit(df)
+    store = open_warehouse(str(tmp_path)).store
+    store.delete_where(spark, "conv_id = 'c0' AND turn_idx = 0")
+    assert store.read(spark).count() == 119
+    assert store.n_buckets == 16 and store.recorded_buckets() == 5
+    store.merge_upsert(spark, _triple_frame(spark, [
+        ("c1", 7, "2024-03-02 07:00:00", "msg")]), keys=["conv_id", "turn_idx"])
+    back = store.read(spark)
+    assert back.count() == 120
+    assert {r[0] for r in back.select("conv_bucket").distinct().collect()} \
+        <= set(range(5))
+    # a pipeline write planned with another count is refused ...
+    io = SnapshotTriplesIO(str(tmp_path), n_buckets=16)
+    with pytest.raises(ValueError, match="--full-refresh"):
+        io.write(df, "triples")
+    # ... unless it replaces the whole table, which records the new count
+    io.full_refresh = True
+    io.write(df, "triples")
+    assert store.recorded_buckets() == 16
+    assert store.read(spark).count() == 120
